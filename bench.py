@@ -327,7 +327,7 @@ def _clean_block_manager(spark) -> None:
     # Release dead references AND force a JVM GC so the
     # ContextCleaner reclaims checkpoint/cache blocks previous
     # queries left behind. Python gc alone is not enough: with
-    # the 48g local driver heap the JVM may not GC for minutes,
+    # a large local driver heap the JVM may not GC for minutes,
     # so dead localCheckpoint RDDs pin their blocks and storage
     # pressure slows later queries 4-6x (root-caused r03,
     # PERF.md "checkpoint block pressure").

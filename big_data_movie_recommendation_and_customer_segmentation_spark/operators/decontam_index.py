@@ -135,15 +135,9 @@ def _bench_grams(
     relation — the stored unit. Distinct BEFORE storage: gram
     multiplicity carries no signal for collision screening and would
     bloat the broadcast side."""
-    from ..sources.io import spread_for_expansion
-
     shingles = _shingle_fn(unit)
-    # r16 (VERDICT r15 ask #5, guide §2.5): the gram explode md5-
-    # hashes every shingle — the same CPU-heavy expansion the dedup
-    # shingle paths spread in r15. Integer-exact keys, so the spread
-    # cannot move any value; structural no-op at scale (size gate).
     return (
-        spread_for_expansion(bench).select(
+        bench.select(
             F.col(bench_col).cast("string").alias("bench_id"),
             F.explode(shingles(text_col, n)).alias("_s"),
         )
@@ -159,12 +153,9 @@ def _doc_grams(
     probe-side unit, hashed with the same shared primitive as the
     stored side so the join is hash-vs-hash (corpus text never rides
     a shuffle)."""
-    from ..sources.io import spread_for_expansion
-
     shingles = _shingle_fn(unit)
-    # same spread rationale as _bench_grams (r16, guide §2.5)
     return (
-        spread_for_expansion(corpus).select(
+        corpus.select(
             F.col(id_col).alias("doc"),
             F.explode(shingles(text_col, n)).alias("_s"),
         )

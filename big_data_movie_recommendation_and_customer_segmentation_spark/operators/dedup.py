@@ -80,20 +80,13 @@ def _shingle_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int, unit: str = "word"
 ) -> DataFrame:
     """(doc, shingle) exploded relation — the dedup analog of the
-    user×item rated relation. ``unit`` per ``_shingle_fn``.
-
-    The input is spread to core-count partitions first when it is a
-    small scan (io.spread_for_expansion, guide §2.5): the explode
-    multiplies every doc into O(|tokens|) shingle rows, so a
-    row-group-starved scan would otherwise hash and dedup the whole
-    corpus on 1-3 tasks. Shingle keys are exact integers/strings —
-    partitioning cannot change any downstream value."""
-    from ..sources.io import spread_for_expansion
-
+    user×item rated relation. ``unit`` per ``_shingle_fn``. One
+    explode + distinct over the input as it arrives; shingle keys are
+    exact integers/strings, so partitioning cannot change any
+    downstream value."""
     shingles = _shingle_fn(unit)
     return (
-        spread_for_expansion(df)
-        .select(F.col(id_col).alias("doc"), F.explode(shingles(text_col, n)).alias("shingle"))
+        df.select(F.col(id_col).alias("doc"), F.explode(shingles(text_col, n)).alias("shingle"))
         .distinct()
     )
 
@@ -169,13 +162,10 @@ def ngram_jaccard_pairs(
     if hash_shingles:
         # hash BEFORE the distinct so even that first shuffle moves
         # 8-byte ints; the distinct then deduplicates at hash level
-        # (mirrored in the oracle). Input spread first, same reasoning
-        # as _shingle_pairs (guide §2.5).
-        from ..sources.io import spread_for_expansion
-
+        # (mirrored in the oracle).
         shingles = _shingle_fn(unit)
         pairs = (
-            spread_for_expansion(df).select(
+            df.select(
                 F.col(id_col).alias("doc"),
                 F.explode(shingles(text_col, n)).alias("_s"),
             )
@@ -374,16 +364,15 @@ def minhash_set_pairs(
     from .similarity import materialization_enabled
 
     if max_item_freq is not None:
-        # r16 (VERDICT r15 ask #6, profiled): the boilerplate-governor
-        # count and the anti-join stream BOTH derive the exploded
-        # shingle relation, and the round-robin spread exchange below
-        # it defeats runtime exchange reuse — the two heaviest stages
-        # of the query were the SAME explode+hash+distinct computed
-        # twice (12.8 + 9.9 executor-seconds at sf0.1). Materialize
-        # the distinct relation once BEFORE the governor so both
-        # consumers read it. The extra pinned bytes over the existing
-        # post-governor checkpoint are just the hot-shingle rows
-        # (bounded: boilerplate by definition).
+        # The boilerplate-governor count and the anti-join stream
+        # BOTH consume the exploded shingle relation; without a pin
+        # each re-derives the explode+hash+distinct (profiled: the
+        # two heaviest stages of the query, 12.8 + 9.9
+        # executor-seconds at sf0.1). Materialize the distinct
+        # relation once BEFORE the governor so both consumers read
+        # it. The extra pinned bytes over the existing post-governor
+        # checkpoint are just the hot-shingle rows (bounded:
+        # boilerplate by definition).
         if materialize_pairs and materialization_enabled():
             pairs = pairs.localCheckpoint(eager=False)
         hot = (

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .relational import filter_active, topk
@@ -76,12 +76,11 @@ def exact_jaccard_pairs(
     if max_item_freq is not None:
         from .relational import keys_with_min_count
 
-        # r16 (VERDICT r15 ask #6): the governor count and the
-        # anti-join stream both re-derive the distinct relation (the
-        # spread's round-robin exchange defeats runtime exchange
-        # reuse), doubling the heaviest stage. Materialize it once
-        # before the governor; the extra pinned bytes over the
-        # post-window checkpoint below are the hot-item rows only.
+        # The governor count and the anti-join stream both consume
+        # the one distinct relation; unpinned, each re-derives it,
+        # doubling the heaviest stage. Materialize it once before
+        # the governor; the extra pinned bytes over the post-window
+        # checkpoint below are the hot-item rows only.
         if materialize_pairs and materialization_enabled():
             pairs = pairs.localCheckpoint(eager=False)
         hot = keys_with_min_count(pairs, "item", max_item_freq + 1).select("item")
@@ -389,8 +388,12 @@ def random_pair_baseline(
     pass over all trials, then average per trial.
 
     ``pairing``:
-    - ``"rand"`` — seeded ``F.rand`` sample + per-trial shuffles
-      (the reference's shape; engine-specific RNG → rows-only gate).
+    - ``"rand"`` — the reference's shape: a seeded sample + per-trial
+      shuffles, each ordered by ``xxhash64(seed', user)`` with the
+      user id as tiebreak. A hash of the row's own key, unlike
+      ``F.rand``, gives the same sample and pairs under any
+      partitioning or caching (Spark-specific hash → rows-only
+      gate).
     - ``"hash"`` — order by the shared md5-prefix hash of the user id
       (sample) / of ``trial:user`` (per-trial shuffle). Statistically
       arbitrary with respect to rating behavior, but deterministic
@@ -443,16 +446,18 @@ def random_pair_baseline(
             F.greatest("user_a", "user_b").alias("user_b"),
         )
     elif pairing == "rand":
+        def seeded(s: int) -> list[Column]:
+            return [F.xxhash64(F.lit(s), F.col("u")), F.col("u")]
+
         users = (
-            ratings.select(F.col(user_col).alias("u")).distinct().orderBy(F.rand(seed)).limit(sample_size)
+            ratings.select(F.col(user_col).alias("u")).distinct().orderBy(*seeded(seed)).limit(sample_size)
         )
         trials = []
         for t in range(n_trials):
             shuffled = (
-                users.withColumn("_r", F.rand(seed + 1 + t))
                 # single-partition window is safe: input is the bounded
                 # `sample_size`-row user sample, not the ratings fact
-                .withColumn("_rn", F.row_number().over(Window.orderBy("_r")))
+                users.withColumn("_rn", F.row_number().over(Window.orderBy(*seeded(seed + 1 + t))))
                 .filter(F.col("_rn") <= 2 * n_pairs)
             )
             left = shuffled.filter(F.col("_rn") % 2 == 1).select(

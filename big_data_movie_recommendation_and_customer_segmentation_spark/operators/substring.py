@@ -77,17 +77,9 @@ def kgram_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame
     1-based codepoint position. Documents shorter than k yield no
     rows (nothing to seed). RAW text — substring dedup reports spans
     in the original document, so no normalization is applied."""
-    from ..sources.io import spread_for_expansion
-
     n_pos = F.length(text_col) - k + 1
-    # Spread a small scan before the per-POSITION explode (one row per
-    # codepoint — the heaviest expansion in the engine): a row-group
-    # starved scan would otherwise md5 every k-gram of the corpus on
-    # 1-3 tasks (guide §2.5). Hash/pos values are exact — partitioning
-    # cannot change results. No-op at scale (see spread_for_expansion).
     return (
-        spread_for_expansion(df)
-        .filter(n_pos >= 1)
+        df.filter(n_pos >= 1)
         .select(
             F.col(id_col).alias("doc"),
             F.col(text_col).alias("_t"),

@@ -45,13 +45,7 @@ def knn_bruteforce(
     k rows per probe per task before the final shuffle.
     Output: probe_id, vec_id, cos_sim, rank.
     """
-    from ..sources.io import spread_for_expansion
-
-    # Spread a small corpus scan before the |probes|-way broadcast
-    # cross join (guide §2.5): the cosine is row-local and top-k ties
-    # break by id, so partitioning cannot change results. No-op at
-    # scale.
-    joined = spread_for_expansion(corpus.select(id_col, vec_col)).crossJoin(
+    joined = corpus.select(id_col, vec_col).crossJoin(
         F.broadcast(probes.select(probe_id_col, probe_vec_col))
     )
     scored = joined.select(
@@ -158,15 +152,7 @@ def knn_bruteforce_vectorized(
                     {probe_id_col: pid[j], id_col: ids[sel], "cos_sim": s[sel]}
                 )
 
-    # With the tie-safe pre-reduction the output is partitioning-
-    # independent, so the small-scan spread (guide §2.5) is now safe
-    # here too: starved single-row-group scans fan out to core count
-    # before the matmul batches. No-op at scale (size gate).
-    from ..sources.io import spread_for_expansion
-
-    partial = spread_for_expansion(corpus.select(id_col, vec_col)).mapInPandas(
-        score, partial_schema
-    )
+    partial = corpus.select(id_col, vec_col).mapInPandas(score, partial_schema)
     return per_group_topk(
         partial,
         probe_id_col,
@@ -224,19 +210,14 @@ def _nearest_cells(
     lower cell id) — the broadcast routing half shared by corpus
     cell assignment (n=1), probe routing (n=n_probe_cells), and
     stored-index upsert routing."""
-    from ..sources.io import spread_for_expansion
-
     sel = (
         [F.col(key_col)]
         + ([F.col(vec_col)] if keep_vec else [])
         + [F.col("cell"), V.cosine(vec_col, "_cv").alias("_csim")]
     )
     out = [key_col] + ([vec_col] if keep_vec else []) + ["cell"]
-    # Spread a small scan before the n_cells-way broadcast cross join
-    # (guide §2.5): cosine is row-local, ties break by cell id — the
-    # routing is partitioning-independent. No-op at scale.
     return per_group_topk(
-        spread_for_expansion(df.select(key_col, vec_col))
+        df.select(key_col, vec_col)
         .crossJoin(F.broadcast(centroids))
         .select(*sel),
         key_col,
@@ -859,12 +840,6 @@ def kmeans_quantized_fit(
     ``kmeans_segments_quantized`` (which now delegates here)."""
     from pyspark.sql import Window
 
-    # No input spread here (r15: A/B'd and rejected — the fit's
-    # parallelism comes from its aggregation shuffles, and the extra
-    # exchange of the vector payload cost more than it unlocked;
-    # same finding as pq_fit's ve. Re-A/B'd r16 inside
-    # semantic_dedup_survivors: spread-on 5.2-7.7 s vs spread-off
-    # 3.8-5.3 s warm — still negative).
     ve = df.select(
         F.col(id_col).alias("vid"), F.posexplode(vec_col).alias("d", "xr")
     ).select(
@@ -960,25 +935,7 @@ def semantic_dedup(
     # (measured 11.5 s → ~6 s cold at sf0.1). Same pattern/rationale
     # as dedup.cluster_representatives' per-round checkpoint.
     asg = asg.localCheckpoint(eager=False)
-    # r16 (guide §2.5, profiled): the within-cluster cosine self-join
-    # keys on `segment` — k (=20) distinct values — so its post-
-    # shuffle parallelism is ≤ k partitions, which AQE then coalesces
-    # to ONE task at starved local sizes (measured: the cosine stage
-    # was 1 task holding ~all of the query's executor time). On a
-    # starved scan, spread the vector relation to core count and
-    # broadcast the build side: the join becomes a BroadcastHashJoin
-    # over the spread stream side — full parallelism, zero added
-    # exchanges on the pair relation. Both moves are size-gated
-    # structural no-ops at scale (broadcasting the corpus would be
-    # wrong there — the shuffle join on segment is the right plan
-    # once clusters carry real bytes). Values identical: join rows,
-    # per-row cosine, and the distinct are partitioning-independent.
-    from ..sources.io import is_starved_scan, spread_for_expansion
-
-    vecs_raw = df.select(F.col(id_col), F.col(vec_col))
-    starved = is_starved_scan(vecs_raw)
-    vecs = spread_for_expansion(vecs_raw)
-    asg_v = asg.join(vecs, id_col)
+    asg_v = asg.join(df.select(F.col(id_col), F.col(vec_col)), id_col)
     a = asg_v.select(
         F.col(id_col).alias("id_a"), F.col("segment").alias("_seg"),
         F.col(vec_col).alias("_va"),
@@ -988,7 +945,7 @@ def semantic_dedup(
         F.col(vec_col).alias("_vb"),
     )
     dropped = (
-        a.join(F.broadcast(b) if starved else b, "_seg")
+        a.join(b, "_seg")
         .filter(F.col("id_a") < F.col("id_b"))
         .filter(V.cosine("_va", "_vb") >= F.lit(min_cosine))
         .select(F.col("id_b").alias(id_col))
@@ -1061,11 +1018,6 @@ def pq_fit(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     sub_d = dim // m
-    # No input spread here (r15: A/B'd and rejected — spread-off built
-    # the IVFADC index in 5.3-6.4 s vs 6.3-7.9 s spread-on at sf0.1:
-    # the fit's parallelism comes from its aggregation shuffles, and
-    # the extra exchange of the vector payload cost more than the
-    # map-side parallelism it unlocked).
     ve = df.select(
         F.col(id_col).alias("vid"),
         F.posexplode(_checked_vec(vec_col, dim, "pq_fit input")).alias("gd", "xr"),

@@ -592,13 +592,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     df agg (joined back onto tf), per-doc top-k window. The doc
     count N is a broadcast scalar, not a driver action."""
     d = load_table(spark, sf_dir, "documents")
-    # r16 (VERDICT r15 ask #2): the r15 input spread was REMOVED after
-    # a 3×3 alternating A/B — the plain token explode is cheap enough
-    # that the extra exchange costs more than the parallelism it
-    # unlocks here (spread-on 1.2-1.5 s warm / 4.8-5.3 s first-run vs
-    # spread-off 0.9-1.1 s / 4.0-4.5 s). The spread was a structural
-    # no-op at scale either way, so removing it changes nothing there;
-    # values are partitioning-independent (exact count aggs).
     toks = d.select(
         "doc_id", F.explode(TX.tokens(TX.normalized_text("text"))).alias("term")
     )

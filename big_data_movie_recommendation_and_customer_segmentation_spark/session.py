@@ -27,6 +27,15 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical RAM."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 >> 20}m"
+
+
 def get_spark(
     app_name: str = "bdmrcs-engine",
     master: str | None = None,
@@ -58,13 +67,12 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # local[N] runs every task thread inside the driver JVM, so
-        # the driver heap IS the cluster's executor memory: size it
-        # like one (32 task slots × ~1.5 GB working set). 8g caused
-        # progressive GC degradation across repeated materializations
-        # (warm runs drifting 5.9→24.4 s on the set-similarity
-        # headline). On a real cluster this setting is irrelevant —
-        # executors get their own spark.executor.memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # the driver heap IS the executor memory. A fixed size either
+        # over-commits a small host or starves a large one; half the
+        # physical RAM leaves the rest to the Python workers, Arrow
+        # buffers and the OS. On a real cluster this setting is
+        # irrelevant — executors get their own spark.executor.memory.
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

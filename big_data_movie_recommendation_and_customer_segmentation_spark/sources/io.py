@@ -206,88 +206,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-# Logical nodes that are safe to see upstream of a spread: narrow,
-# shuffle-free, and cheap to re-evaluate. Anything else (joins, aggs,
-# windows, checkpointed RDDs, ...) means the input is either already
-# exchange-partitioned (so parallelism is governed by
-# spark.sql.shuffle.partitions / AQE, not the scan) or too expensive
-# to blindly re-shuffle — spread_for_expansion then no-ops.
-_SPREAD_SAFE_NODES = frozenset(
-    {
-        "LogicalRelation",  # v1 file scan (parquet reads here are v1)
-        "Project",
-        "Filter",
-        "SubqueryAlias",
-        "GlobalLimit",
-        "LocalLimit",
-        "LocalRelation",
-    }
-)
-
-
-def spread_for_expansion(df: DataFrame, per_core_bytes: int = 4 << 20) -> DataFrame:
-    """Fan a SMALL scan out to ``defaultParallelism`` partitions before
-    a CPU-heavy per-row expansion (shingling, per-position k-grams,
-    per-component vector explodes).
-
-    Guide §2.5 "input skew": a scan whose byte size yields fewer file
-    splits than the session has cores (single row-group files, tiny
-    inputs) enters the expansion with 1-3 tasks, serializing work that
-    multiplies each input row 10-100×. The fix the guide prescribes —
-    "repartition immediately after the read" — applied adaptively:
-
-    - decided from the optimizer's OWN size estimate
-      (``optimizedPlan().stats().sizeInBytes``, driver-side, no jobs);
-    - only when the whole input is smaller than one ~``per_core_bytes``
-      split per core (default 4 MB = the scan planner's
-      ``spark.sql.files.openCostInBytes`` floor, i.e. exactly the
-      inputs whose scans cannot reach core-count parallelism);
-    - only when the upstream plan is a narrow scan chain
-      (``_SPREAD_SAFE_NODES``) — never after a join/agg/window, whose
-      output partitioning is already shuffle-governed.
-
-    At production scale the size test is false and the function is a
-    structural no-op (zero plan change); on starved inputs it costs one
-    exchange of the (small) un-expanded rows. Value semantics are
-    unchanged for any partitioning-independent plan; callers on
-    float-aggregation paths must not use it (FP sum order would move).
-    """
-    if not is_starved_scan(df, per_core_bytes):
-        return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def is_starved_scan(df: DataFrame, per_core_bytes: int = 4 << 20) -> bool:
-    """True when ``df`` is a narrow scan chain whose optimizer size
-    estimate is under one ~``per_core_bytes`` split per core — i.e. a
-    scan that cannot reach core-count parallelism (single-row-group
-    files, tiny inputs). The decision gate shared by
-    ``spread_for_expansion`` and the size-gated broadcast hints; FALSE
-    at production scale by construction, and fail-safe False on any
-    plan-traversal surprise.
-
-    Walks the optimized logical plan's actual nodes and compares exact
-    nodeName() values (ADVICE r15: treeString()-line prefix matching
-    was coupled to Spark's print format — a rendered simpleString that
-    happens to start with a whitelisted word would misclassify)."""
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    try:
-        jplan = df._jdf.queryExecution().optimizedPlan()
-        stack = [jplan]
-        while stack:
-            node = stack.pop()
-            if node.nodeName() not in _SPREAD_SAFE_NODES:
-                return False
-            children = node.children()
-            for i in range(children.size()):
-                stack.append(children.apply(i))
-        size = int(str(jplan.stats().sizeInBytes()))
-    except Exception:
-        return False
-    return size < cores * per_core_bytes
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType, header: bool = True) -> DataFrame:
     """CSV scan with mandatory schema (no inferSchema — replaces
     reference's ``top_100_pairs.py:26`` pattern without the extra

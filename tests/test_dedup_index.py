@@ -231,6 +231,22 @@ def test_upsert_equals_joint_build(spark, sf_dir, tmp_path):
     assert gb == wb
 
 
+def test_build_is_independent_of_input_partitioning(spark, sf_dir, tmp_path):
+    """The build shingles and signs the corpus as it arrives: one
+    input partition or four, the stored index (signatures, bands and
+    governor set) must have the identical content fingerprint."""
+    d = load_table(spark, sf_dir, "documents")
+    prints = set()
+    for nparts in (1, 4):
+        path = str(tmp_path / f"p{nparts}")
+        DI.build_minhash_index(
+            d.repartition(nparts), path, n=3, num_perm=32, band_rows=2, seed=42,
+            max_shingle_freq=5,
+        )
+        prints.add(DI.minhash_index_fingerprint(spark, path))
+    assert len(prints) == 1, prints
+
+
 def test_governor_state_is_part_of_the_index(spark, tmp_path):
     """A governed index persists its hot-shingle set, and the batch
     side drops the SAME shingles: a batch doc identical to a corpus

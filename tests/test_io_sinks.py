@@ -322,29 +322,3 @@ def test_zorder_clustered_write_shrinks_both_dims(spark, tmp_path):
     assert z_ymean < 0.6, z_ymean
     # and nothing was lost
     assert spark.read.parquet(zpath).count() == n
-
-
-def test_spread_for_expansion_node_walk(spark, sf_dir):
-    """ADVICE r15 (low): the spread safety check walks the optimized
-    logical plan's exact nodeName() values instead of prefix-matching
-    treeString lines. Pin both sides of the gate: a small narrow scan
-    chain gets the round-robin repartition; anything already
-    shuffle-governed (aggregate) or too large must no-op (same plan
-    object back)."""
-    from big_data_movie_recommendation_and_customer_segmentation_spark.sources.io import (
-        spread_for_expansion,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    narrow = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
-    spread = spread_for_expansion(narrow)
-    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    assert sorted(r.doc_id for r in spread.collect()) == sorted(
-        r.doc_id for r in narrow.collect()
-    )
-
-    agg = docs.groupBy("lang").count()
-    assert spread_for_expansion(agg) is agg  # shuffle-governed: no-op
-
-    big = docs  # size gate: tiny threshold makes the scan "large"
-    assert spread_for_expansion(big, per_core_bytes=1) is big

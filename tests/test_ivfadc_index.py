@@ -71,3 +71,24 @@ def test_ivfadc_index_meta_drives_geometry(spark, sf_dir, tmp_path):
     assert rows and all(r.rank <= 5 for r in rows)
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     assert (meta.m, meta.pq_k, meta.n_cells) == (16, 8, 4)
+
+
+def test_ivfadc_index_search_is_independent_of_input_partitioning(spark, sf_dir, tmp_path):
+    """Cell assignment, PQ encoding and probe routing read their input
+    as it arrives: corpus and probes at one partition or at four must
+    give the identical neighbour lists."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    probes = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    outs = []
+    for nparts in (1, 4):
+        path = str(tmp_path / f"ivfadc_p{nparts}")
+        VO.build_ivfadc_index(e.repartition(nparts), path, n_cells=8, dim=64, m=8, pq_k=16, iters=2)
+        out = VO.ivfadc_index_search(
+            spark, path, probes.repartition(nparts), k_neighbors=10, n_probe_cells=4
+        )
+        outs.append(sorted((r.probe_id, r.rank, r.vec_id) for r in out.collect()))
+    assert outs[0] and outs[0] == outs[1]

@@ -66,6 +66,40 @@ def test_random_pair_baseline_shape(spark, co_purchases):
             assert -1.0 <= r.avg_corr <= 1.0
 
 
+def test_random_pair_baseline_rand_independent_of_layout(spark, co_purchases):
+    """``pairing='rand'`` orders its sample and per-trial shuffles by a
+    seeded hash of the user id, so caching the ratings or changing
+    their partition count cannot move any trial's pairs or average.
+    The plan evaluates the sample in two branches (the distinct pairs
+    fed to the correlations, the per-trial join back); both must see
+    the same pairs."""
+    ratings = co_purchases.groupBy("o_custkey", "l_partkey").agg(
+        F.count(F.lit(1)).cast("double").alias("r")
+    )
+
+    def trials(df):
+        out = SIM.random_pair_baseline(
+            df, "o_custkey", "l_partkey", "r", n_pairs=20, n_trials=3, sample_size=200, seed=11
+        ).collect()
+        return {r.trial: (r.n_pairs_scored, r.avg_corr) for r in out}
+
+    def same(got, want):
+        # pairs and counts are exact; the per-trial mean may differ
+        # only by float summation order
+        assert got.keys() == want.keys()
+        for t, (n, corr) in want.items():
+            assert got[t][0] == n and got[t][1] == pytest.approx(corr, abs=1e-12), t
+
+    one = trials(ratings.repartition(1))
+    assert len(one) == 3 and all(c is not None for _, c in one.values())
+    same(trials(ratings.repartition(4)), one)
+    cached = ratings.repartition(4).cache()
+    try:
+        same(trials(cached), one)
+    finally:
+        cached.unpersist()
+
+
 def test_twins_correlate_more_than_random_pairs_planted(spark):
     """The reference's end-to-end semantic validation (S2
     ``correlation_optimised.py``: top-LSH-pair avg Pearson 0.2740 vs
