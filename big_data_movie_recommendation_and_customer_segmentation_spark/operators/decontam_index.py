@@ -55,13 +55,12 @@ from ..functions import textops as TX
 from .dedup import _shingle_fn
 from .dedup_index import (
     _drop_tombstones,
-    _pin,
     _recover_build,
-    _release_pin,
     _rename_or_raise,
     _swap_in,
     _swap_index_dir,
 )
+from .relational import _pin, _release_pin
 from .vectorops import _hadoop_delete, _hadoop_fs
 
 # The "benchmark-sized by contract" threshold, ENFORCED (VERDICT r14):
@@ -399,8 +398,6 @@ def upsert_decontam_index(
                 else:
                     _drop_tombstones(spark, path)
             finally:
-                from .dedup_index import _release_pin
-
                 _release_pin(kept)
     return {"inserted": int(n_new), "restored": int(n_restored)}
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import textops as TX
+from .relational import _pin
 from .similarity import exact_jaccard_pairs
 
 
@@ -96,7 +97,6 @@ def route_by_script(
     text_col: str,
     *,
     out_col: str = "dominant_script",
-    materialize: bool = True,
 ) -> DataFrame:
     """Attach the dominant-script routing column, computed ONCE.
 
@@ -110,21 +110,14 @@ def route_by_script(
     an expensive derivation (e.g. transliteration — transform + md5
     per token) re-evaluates under every count leg (measured 10.4 s
     for the inlined filter vs 0.6 s for the derivation itself at
-    sf0.1, single input partition). The lazy localCheckpoint after
-    the one-shot projection pins the routing decision as DATA — the
-    same per-consumer-re-derivation tradeoff as ``materialize_pairs``
-    and the shape a 100 TB pipeline wants anyway: the routing column
-    is computed once and persisted, then every downstream leg (char
-    unit, word unit, per-script stats) filters on materialized state
-    instead of re-deriving the profile. ``materialize=False`` (or the
-    global materialization kill-switch) keeps the pure-lineage form.
+    sf0.1, single input partition). The lazy pin after the one-shot
+    projection keeps the routing decision as DATA — the shape a
+    100 TB pipeline wants anyway: the routing column is computed once
+    and persisted, then every downstream leg (char unit, word unit,
+    per-script stats) filters on materialized state instead of
+    re-deriving the profile.
     """
-    routed = df.withColumn(out_col, TX.dominant_script(text_col))
-    from .similarity import materialization_enabled
-
-    if materialize and materialization_enabled():
-        routed = routed.localCheckpoint(eager=False)
-    return routed
+    return _pin(df.withColumn(out_col, TX.dominant_script(text_col)))
 
 
 def ngram_jaccard_pairs(
@@ -134,8 +127,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_shingle_freq: int | None = None,
-    prune_unique_shingles: bool = False,
-    materialize_pairs: bool = False,
     hash_shingles: bool = False,
     unit: str = "word",
 ) -> DataFrame:
@@ -175,8 +166,7 @@ def ngram_jaccard_pairs(
     else:
         pairs = _shingle_pairs(df, id_col, text_col, n, unit=unit)
     out = exact_jaccard_pairs(
-        pairs, "doc", "shingle", threshold=threshold, max_item_freq=max_shingle_freq,
-        prune_unique_items=prune_unique_shingles, materialize_pairs=materialize_pairs,
+        pairs, "doc", "shingle", threshold=threshold, max_item_freq=max_shingle_freq
     )
     return out.withColumnsRenamed({"user_a": "doc_a", "user_b": "doc_b"})
 
@@ -259,7 +249,6 @@ def minhash_duplicate_pairs(
     seed: int = 42,
     max_shingle_freq: int | None = None,
     base_hash: str = "xxhash64",
-    materialize_pairs: bool = False,
     unit: str = "word",
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs with exact-Jaccard rescore:
@@ -299,7 +288,6 @@ def minhash_duplicate_pairs(
         seed=seed,
         max_item_freq=max_shingle_freq,
         base_hash=base_hash,
-        materialize_pairs=materialize_pairs,
     )
 
 
@@ -345,7 +333,6 @@ def minhash_set_pairs(
     seed: int = 42,
     max_item_freq: int | None = None,
     base_hash: str = "xxhash64",
-    materialize_pairs: bool = False,
 ) -> DataFrame:
     """MinHash+LSH similar-pair mining over an arbitrary (doc, item)
     set relation — the generic core shared by text near-dup
@@ -361,20 +348,16 @@ def minhash_set_pairs(
     jaccard (exact, rescored from the true sets — output ⊆ the exact
     set-similarity join at the same threshold by construction).
     """
-    from .similarity import materialization_enabled
-
     if max_item_freq is not None:
         # The boilerplate-governor count and the anti-join stream
         # BOTH consume the exploded shingle relation; without a pin
         # each re-derives the explode+hash+distinct (profiled: the
         # two heaviest stages of the query, 12.8 + 9.9
-        # executor-seconds at sf0.1). Materialize the distinct
-        # relation once BEFORE the governor so both consumers read
-        # it. The extra pinned bytes over the existing post-governor
-        # checkpoint are just the hot-shingle rows (bounded:
-        # boilerplate by definition).
-        if materialize_pairs and materialization_enabled():
-            pairs = pairs.localCheckpoint(eager=False)
+        # executor-seconds at sf0.1). Pin the distinct relation once
+        # BEFORE the governor so both consumers read it. The extra
+        # pinned bytes over the post-governor pin are just the
+        # hot-shingle rows (bounded: boilerplate by definition).
+        pairs = _pin(pairs)
         hot = (
             pairs.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("_df"))
@@ -383,11 +366,10 @@ def minhash_set_pairs(
         )
         pairs = pairs.join(hot, "shingle", "left_anti")
 
-    if materialize_pairs and materialization_enabled():
-        # same measured tradeoff as exact_jaccard_pairs: the shingle
-        # relation feeds signatures AND both rescore set legs; one
-        # lazy localCheckpoint replaces per-consumer re-derivation
-        pairs = pairs.localCheckpoint(eager=False)
+    # the shingle relation feeds signatures AND both rescore set
+    # legs; one pin replaces per-consumer re-derivation (measured in
+    # exact_jaccard_pairs: ~2× warm, cold 3.0 vs 9.9 s at sf0.1)
+    pairs = _pin(pairs)
     sig = minhash_signatures(pairs, num_perm=num_perm, seed=seed, base_hash=base_hash)
 
     # Band join keys are the RAW band-row values (band_id, v0..v{r-1}),
@@ -407,10 +389,9 @@ def minhash_set_pairs(
     )
 
     # cand feeds two consumers below (the doc list and the rescore
-    # join); materialize it too — it is tiny (candidate pairs), and
+    # join); pin it too — it is tiny (candidate pairs), and
     # re-deriving it would run the band self-join twice.
-    if materialize_pairs and materialization_enabled():
-        cand = cand.localCheckpoint(eager=False)
+    cand = _pin(cand)
 
     # Rescore sets are built ONLY for docs that appear in a candidate
     # pair (broadcast semi-join: the candidate doc list is tiny by
@@ -794,7 +775,6 @@ def ngram_containment_pairs(
     n: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = None,
-    materialize_pairs: bool = False,
     hash_shingles: bool = False,
     round_to: int = 6,
     unit: str = "word",
@@ -816,8 +796,7 @@ def ngram_containment_pairs(
     """
     out = ngram_jaccard_pairs(
         df, id_col, text_col, n=n, threshold=0.0,
-        max_shingle_freq=max_shingle_freq, materialize_pairs=materialize_pairs,
-        hash_shingles=hash_shingles, unit=unit,
+        max_shingle_freq=max_shingle_freq, hash_shingles=hash_shingles, unit=unit,
     )
     containment = F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
     return (

@@ -47,14 +47,11 @@ delete — schedule it by tombstone ratio, not per delete batch.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _shingle_pairs, banded_signature_rows, minhash_signatures
-from .similarity import materialization_enabled
+from .relational import _pin, _release_pin, track_pins
 from .vectorops import _hadoop_delete, _hadoop_fs, pin_empty_partition
 
 
@@ -65,59 +62,6 @@ def _maybe_bcast(df: DataFrame, flag: bool) -> DataFrame:
     — the rescore legs used to force-broadcast unconditionally).
     With the hint absent, AQE picks the strategy."""
     return F.broadcast(df) if flag else df
-
-
-_PIN_TRACK = threading.local()
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint behind the global materialization
-    kill-switch (SPARK_GRAFT_NO_MATERIALIZE — plan tooling and plan
-    asserts need the un-truncated lineage). When a ``track_pins``
-    scope is active on this thread, the pin is registered for
-    release at scope exit (ADVICE r14)."""
-    if not materialization_enabled():
-        return df
-    out = df.localCheckpoint(eager=False)
-    scope = getattr(_PIN_TRACK, "active", None)
-    if scope is not None:
-        scope.append(out)
-    return out
-
-
-def _release_pin(df: DataFrame) -> None:
-    """Release the block-manager storage behind ONE localCheckpoint
-    (ADVICE r14): the checkpointed RDD lives inside the DataFrame's
-    LogicalRDD plan node, out of ``DataFrame.unpersist()``'s reach —
-    a per-batch caller that never releases accumulates one pinned
-    RDD per call for the process's lifetime. No-op for un-pinned
-    plans (materialization kill-switch). The DataFrame must not be
-    re-evaluated afterwards (truncated lineage cannot recompute)."""
-    jplan = df._jdf.queryExecution().analyzed()
-    if jplan.getClass().getName().endswith(".LogicalRDD"):
-        jplan.rdd().unpersist(False)
-
-
-@contextmanager
-def track_pins():
-    """Scope for per-batch callers (the streaming gates): every
-    ``_pin`` this thread creates inside the scope — including nested
-    ones whose LogicalRDD hides inside another checkpoint's RDD
-    lineage, unreachable by any plan walk — is released at exit, so
-    the block manager stays flat across micro-batches instead of
-    growing by ~4 pinned RDDs per batch (ADVICE r14). Everything
-    produced under the scope must be fully consumed before it closes
-    (truncated lineage cannot recompute). Nested scopes compose: the
-    inner scope releases its own pins only."""
-    prev = getattr(_PIN_TRACK, "active", None)
-    mine: list[DataFrame] = []
-    _PIN_TRACK.active = mine
-    try:
-        yield
-    finally:
-        _PIN_TRACK.active = prev
-        for df in mine:
-            _release_pin(df)
 
 
 def _read_meta(spark: SparkSession, path: str):

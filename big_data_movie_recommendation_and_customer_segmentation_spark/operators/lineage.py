@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import textops as TX
+from .relational import _release_pin
 
 # Spark's hex() upper-cases; keep the 16-hex-char lower-case form of
 # decontam_index_fingerprint so handles compare as equal strings.
@@ -176,8 +177,6 @@ def append_manifest(entries: DataFrame, path: str, run_id: int) -> None:
         else:
             stamped.coalesce(1).write.mode("append").parquet(path)
     finally:
-        from .dedup_index import _release_pin
-
         _release_pin(stamped)
 
 

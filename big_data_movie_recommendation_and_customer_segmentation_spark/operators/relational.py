@@ -8,10 +8,63 @@ the thing that decides whether the operator survives 100 TB.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+_PIN_TRACK = threading.local()
+
+
+def _pin(df: DataFrame) -> DataFrame:
+    """Lazy localCheckpoint for a relation with several consumers:
+    the lineage is truncated at the first action, so every consumer
+    reads the one materialized copy instead of re-deriving it (the
+    set miners measured ~2× warm, cold 3.0 vs 9.9 s at sf0.1). When
+    a ``track_pins`` scope is active on this thread, the pin is
+    registered for release at scope exit (ADVICE r14)."""
+    out = df.localCheckpoint(eager=False)
+    scope = getattr(_PIN_TRACK, "active", None)
+    if scope is not None:
+        scope.append(out)
+    return out
+
+
+def _release_pin(df: DataFrame) -> None:
+    """Release the block-manager storage behind ONE localCheckpoint
+    (ADVICE r14): the checkpointed RDD lives inside the DataFrame's
+    LogicalRDD plan node, out of ``DataFrame.unpersist()``'s reach —
+    a per-batch caller that never releases accumulates one pinned
+    RDD per call for the process's lifetime. No-op for a plan whose
+    root is not a checkpoint. The DataFrame must not be re-evaluated
+    afterwards (truncated lineage cannot recompute)."""
+    jplan = df._jdf.queryExecution().analyzed()
+    if jplan.getClass().getName().endswith(".LogicalRDD"):
+        jplan.rdd().unpersist(False)
+
+
+@contextmanager
+def track_pins():
+    """Scope for per-batch callers (the streaming gates): every
+    ``_pin`` this thread creates inside the scope — including nested
+    ones whose LogicalRDD hides inside another checkpoint's RDD
+    lineage, unreachable by any plan walk — is released at exit, so
+    the block manager stays flat across micro-batches instead of
+    growing by ~4 pinned RDDs per batch (ADVICE r14). Everything
+    produced under the scope must be fully consumed before it closes
+    (truncated lineage cannot recompute). Nested scopes compose: the
+    inner scope releases its own pins only."""
+    prev = getattr(_PIN_TRACK, "active", None)
+    mine: list[DataFrame] = []
+    _PIN_TRACK.active = mine
+    try:
+        yield
+    finally:
+        _PIN_TRACK.active = prev
+        for df in mine:
+            _release_pin(df)
 
 
 def stratified_hash_sample(

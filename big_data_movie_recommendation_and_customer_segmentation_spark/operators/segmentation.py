@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .packing import bucketed_running_sum
+from .relational import _pin
 
 _QS = (0.2, 0.4, 0.6, 0.8)
 
@@ -153,14 +154,10 @@ def revenue_pareto(
     )
     # rev feeds three consumers (the quantile sketch, the bucket
     # totals, the windowed relation itself — plus the total scalar
-    # below): one lazy localCheckpoint replaces per-consumer
-    # re-aggregation of orders (r15, same measured tradeoff as
-    # materialize_pairs; ~0.2 s warm at sf0.1 and one orders scan per
-    # consumer saved at any scale).
-    from .similarity import materialization_enabled
-
-    if materialization_enabled():
-        rev = rev.localCheckpoint(eager=False)
+    # below): one pin replaces per-consumer re-aggregation of orders
+    # (r15: ~0.2 s warm at sf0.1 and one orders scan per consumer
+    # saved at any scale).
+    rev = _pin(rev)
 
     run = bucketed_running_sum(
         rev,

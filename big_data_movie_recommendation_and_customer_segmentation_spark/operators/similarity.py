@@ -21,20 +21,10 @@ Two paths, mirroring SURVEY §2.C6/§2.K:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .relational import filter_active, topk
-
-
-def materialization_enabled() -> bool:
-    """Global escape hatch for ``materialize_pairs``: plan-doc tooling
-    (tools/gen_plans.py) sets SPARK_GRAFT_NO_MATERIALIZE=1 because a
-    localCheckpoint boundary prints as `Scan ExistingRDD`, hiding the
-    upstream lineage the plan docs exist to show."""
-    return os.environ.get("SPARK_GRAFT_NO_MATERIALIZE", "") != "1"
+from .relational import _pin, filter_active, topk
 
 
 def user_item_pairs(df: DataFrame, user_col: str, item_col: str) -> DataFrame:
@@ -50,8 +40,6 @@ def exact_jaccard_pairs(
     threshold: float = 0.5,
     min_items: int = 1,
     max_item_freq: int | None = None,
-    prune_unique_items: bool = False,
-    materialize_pairs: bool = False,
 ) -> DataFrame:
     """All user pairs with exact Jaccard(item-set, item-set) ≥ threshold.
 
@@ -78,29 +66,25 @@ def exact_jaccard_pairs(
 
         # The governor count and the anti-join stream both consume
         # the one distinct relation; unpinned, each re-derives it,
-        # doubling the heaviest stage. Materialize it once before
-        # the governor; the extra pinned bytes over the post-window
-        # checkpoint below are the hot-item rows only.
-        if materialize_pairs and materialization_enabled():
-            pairs = pairs.localCheckpoint(eager=False)
+        # doubling the heaviest stage. Pin it once before the
+        # governor; the extra pinned bytes over the post-window pin
+        # below are the hot-item rows only.
+        pairs = _pin(pairs)
         hot = keys_with_min_count(pairs, "item", max_item_freq + 1).select("item")
         pairs = pairs.join(hot, "item", "left_anti")
 
     # pairs feeds up to five consumers (hot-key filter, per-user
-    # sizes, both self-join legs). Two reuse strategies, measured at
-    # sf0.1 with the governor on:
-    # - default: rely on runtime exchange reuse. With the extra
-    #   anti-join in the lineage the final plan re-derives the
-    #   distinct subtree per consumer (8 parquet scans) and AQE only
-    #   partially dedups them: warm 3.2-4.0 s. (.persist() was worse
-    #   still — it blocked the reuse: 4.3s → 5.8s, PERF.md.)
-    # - materialize_pairs=True: lazily localCheckpoint the governed
-    #   relation, truncating the lineage so every consumer reads the
-    #   one materialized copy: warm 1.7 s (~2×), cold 3.0 vs 9.9 s.
-    #   Storage is O(|user,item| pairs) on executors, reclaimed by
-    #   the ContextCleaner when the plan is GC'd. At cluster scale
-    #   prefer persist(DISK_ONLY) or a reliable checkpoint dir —
-    #   localCheckpoint blocks don't survive executor loss.
+    # sizes, both self-join legs), so the sized relation is pinned:
+    # every consumer reads the one materialized copy. Measured at
+    # sf0.1 with the governor on: warm 1.7 s vs 3.2-4.0 s (~2×),
+    # cold 3.0 vs 9.9 s, against relying on runtime exchange reuse,
+    # which re-derived the distinct subtree per consumer (8 parquet
+    # scans; .persist() was worse still — it blocked the reuse:
+    # 4.3s → 5.8s, PERF.md). Storage is O(|user,item| pairs) on
+    # executors, reclaimed by the ContextCleaner when the plan is
+    # GC'd. At cluster scale prefer persist(DISK_ONLY) or a reliable
+    # checkpoint dir — localCheckpoint blocks don't survive executor
+    # loss.
     # Per-user set size rides WITH each (user, item) row into the
     # self-join (one window shuffle over the 1-row-per-item relation)
     # instead of being joined back onto the pair aggregate. The join
@@ -110,41 +94,17 @@ def exact_jaccard_pairs(
     # scale per-user sizes may exceed broadcast limits anyway.
     # Carrying two constant ints per row through the pair agg
     # (min() of a per-group constant) is O(pairs)-neutral and
-    # join-free at any scale. The checkpoint sits AFTER the window so
+    # join-free at any scale. The pin sits AFTER the window so
     # both self-join legs read the one materialized sized relation
     # (before: each leg re-ran Exchange→Sort→Window). Measured at
     # sf0.1, in-bench warm medians: 9.9 s (post-agg size joins)
     # → 4.7 s (sizes carried through the agg; PERF.md r3).
-    from pyspark.sql import Window
-
-    sized = pairs.withColumn(
-        "n_items", F.count(F.lit(1)).over(Window.partitionBy("user"))
+    sized = _pin(
+        pairs.withColumn("n_items", F.count(F.lit(1)).over(Window.partitionBy("user")))
     )
-    if materialize_pairs and materialization_enabled():
-        sized = sized.localCheckpoint(eager=False)
 
-    joinable = sized
-    if prune_unique_items:
-        # An item held by a single user contributes no pair, so only
-        # items with frequency ≥ 2 need to enter the self-join. Sizes
-        # stay computed on the unpruned sets (semantics unchanged).
-        # Tradeoff: +2 shuffles of the (user, item) relation vs
-        # shrunken self-join legs — wins when shared items dominate
-        # the volume (duplication-heavy corpora), loses on long-tail
-        # data where the self-join is already cheap. Measured at
-        # sf0.1 on the synthetic documents: ~20% slower, hence
-        # opt-in; the hot-item quadratic blowup is governed by
-        # ``max_item_freq`` either way.
-        shared = (
-            sized.groupBy("item")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") >= 2)
-            .select("item")
-        )
-        joinable = sized.join(shared, "item")
-
-    a = joinable.select(F.col("user").alias("user_a"), "item", F.col("n_items").alias("n_a"))
-    b = joinable.select(F.col("user").alias("user_b"), "item", F.col("n_items").alias("n_b"))
+    a = sized.select(F.col("user").alias("user_a"), "item", F.col("n_items").alias("n_a"))
+    b = sized.select(F.col("user").alias("user_b"), "item", F.col("n_items").alias("n_b"))
     out = (
         a.join(b, "item")
         .filter(F.col("user_a") < F.col("user_b"))
@@ -172,15 +132,11 @@ def top_similar_pairs(
     threshold: float = 0.0,
     min_items: int = 1,
     max_item_freq: int | None = None,
-    materialize_pairs: bool = False,
 ) -> DataFrame:
     """Top-k most-similar user pairs by exact Jaccard — the S1 headline
     ("top_100_pairs"), with a deterministic (jaccard desc, user_a,
     user_b) order instead of the reference's signature-estimate heap."""
-    pairs = exact_jaccard_pairs(
-        df, user_col, item_col, threshold, min_items, max_item_freq,
-        materialize_pairs=materialize_pairs,
-    )
+    pairs = exact_jaccard_pairs(df, user_col, item_col, threshold, min_items, max_item_freq)
     return topk(
         pairs,
         [F.col("jaccard").desc(), F.col("user_a").asc(), F.col("user_b").asc()],

@@ -69,7 +69,7 @@ from pyspark.sql import functions as F
 
 from ..functions import textops as TX
 from ..sqlutil import quote_ident
-from .dedup_index import _pin
+from .relational import _pin
 
 
 def kgram_hashes(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
@@ -184,9 +184,8 @@ def repeated_span_pairs(
             "needs chained seeds' verified k-grams to overlap or touch"
         )
     # sel feeds BOTH sides of the seed self-join (and the governor's
-    # frequency pass): one lazy materialization instead of re-running
-    # the per-position explode + winnow per consumer — the same
-    # measured tradeoff as materialize_pairs in the set miners.
+    # frequency pass): one pin instead of re-running the per-position
+    # explode + winnow per consumer.
     # Window form, not winnowed_fingerprints: measured 7× faster at
     # sf1 (see module docstring).
     sel = _pin(winnow(kgram_hashes(df, id_col, text_col, k), window))

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
-from .relational import per_group_topk
+from .relational import _pin, per_group_topk
 
 
 def knn_bruteforce(
@@ -2106,8 +2106,6 @@ def semantic_index_dedup(
     # cand feeds the candidate-id semi-join AND the rescore join: one
     # lazy materialization instead of running the whole ADC search
     # twice (same multi-consumer discipline as the MinHash index)
-    from .dedup_index import _pin
-
     cand = _pin(cand)
 
     corpus_cand = corpus_vectors.join(

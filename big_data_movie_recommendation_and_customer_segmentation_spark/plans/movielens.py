@@ -83,10 +83,11 @@ def correlation_validation(
     pairs vs seeded random-pair trials
     (``correlation_optimised.py:41-97``; published 0.2740 vs 0.1215,
     report p.3). All correlations run distributed; only the two
-    scalar averages reach the driver."""
+    scalar averages and the twin-pair count reach the driver (the
+    twin average and count from one aggregate)."""
     r = filter_active(_check(ratings), "userId", min_ratings)
     twin_corr = SIM.pair_rating_correlation(r, pairs, "userId", "movieId", "rating")
-    twin_avg = twin_corr.agg(F.avg("corr")).first()[0]
+    twin_avg, n_twin = twin_corr.agg(F.avg("corr"), F.count(F.lit(1))).first()
     baseline = SIM.random_pair_baseline(
         r, "userId", "movieId", "rating",
         n_pairs=n_pairs, n_trials=n_trials, sample_size=sample_size, seed=seed,
@@ -95,7 +96,7 @@ def correlation_validation(
     return {
         "twin_avg_corr": twin_avg,
         "random_avg_corr": random_avg,
-        "n_twin_pairs_scored": twin_corr.count(),
+        "n_twin_pairs_scored": n_twin,
     }
 
 

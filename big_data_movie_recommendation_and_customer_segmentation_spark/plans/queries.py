@@ -621,8 +621,7 @@ def jaccard_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair scoring (S1 ``top_100_pairs.py:82-107``)."""
     cp = _co_purchases(spark, sf_dir)
     pairs = SIM.exact_jaccard_pairs(
-        cp, "o_custkey", "l_partkey", threshold=0.05, max_item_freq=MAX_ITEM_FREQ,
-        materialize_pairs=True,
+        cp, "o_custkey", "l_partkey", threshold=0.05, max_item_freq=MAX_ITEM_FREQ
     )
     return pairs.withColumn("jaccard", F.round("jaccard", 6))
 
@@ -642,8 +641,7 @@ def top_similar_customer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     similar pairs, deterministic order, no driver-side heap."""
     cp = _co_purchases(spark, sf_dir)
     pairs = SIM.top_similar_pairs(
-        cp, "o_custkey", "l_partkey", k=50, threshold=0.0, max_item_freq=MAX_ITEM_FREQ,
-        materialize_pairs=True,
+        cp, "o_custkey", "l_partkey", k=50, threshold=0.0, max_item_freq=MAX_ITEM_FREQ
     )
     return pairs.select("user_a", "user_b", "n_common", F.round("jaccard", 6).alias("jaccard"))
 
@@ -712,8 +710,7 @@ def pair_rating_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").cast("long").alias("r"))
     )
     top_pairs = SIM.top_similar_pairs(
-        cp_full, "o_custkey", "l_partkey", k=50, threshold=0.0, max_item_freq=MAX_ITEM_FREQ,
-        materialize_pairs=True,
+        cp_full, "o_custkey", "l_partkey", k=50, threshold=0.0, max_item_freq=MAX_ITEM_FREQ
     )
     out = SIM.pair_rating_correlation_exact(
         ratings, top_pairs, "o_custkey", "l_partkey", "r", min_common=3
@@ -786,7 +783,6 @@ def minhash_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = DD.minhash_set_pairs(
         sets, threshold=0.05, num_perm=_MH_NUM_PERM, band_rows=_MH_BAND_ROWS,
         seed=_MH_SEED, max_item_freq=MAX_ITEM_FREQ, base_hash="md5",
-        materialize_pairs=True,
     )
     return out.select(
         F.col("doc_a").alias("user_a"),

@@ -776,7 +776,7 @@ def ngram_duplicate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     out = DD.ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, max_shingle_freq=MAX_SHINGLE_FREQ,
-        materialize_pairs=True, hash_shingles=True,
+        hash_shingles=True,
     )
     return out.withColumn("jaccard", F.round("jaccard", 6))
 
@@ -841,7 +841,7 @@ def minhash_duplicate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = DD.minhash_duplicate_pairs(
         spark, d, "doc_id", "text", n=3, threshold=0.5,
         num_perm=_MH_NUM_PERM, band_rows=_MH_BAND_ROWS, seed=_MH_SEED,
-        max_shingle_freq=MAX_SHINGLE_FREQ, base_hash="md5", materialize_pairs=True,
+        max_shingle_freq=MAX_SHINGLE_FREQ, base_hash="md5",
     )
     return out.withColumn("jaccard", F.round("jaccard", 6))
 
@@ -1043,7 +1043,7 @@ def training_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = DD.dedup_exact(scrubbed, "doc_id", "text")
     pairs = DD.ngram_jaccard_pairs(
         surv, "doc_id", "text", n=3, threshold=0.5,
-        max_shingle_freq=MAX_SHINGLE_FREQ, materialize_pairs=True,
+        max_shingle_freq=MAX_SHINGLE_FREQ,
     )
     drop = DD.dedup_representatives(pairs, rounds=None).select("doc_id")
     kept = surv.join(drop, "doc_id", "left_anti")

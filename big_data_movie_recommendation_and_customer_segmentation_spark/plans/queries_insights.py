@@ -487,7 +487,7 @@ def customer_user_cf_recommendations(spark: SparkSession, sf_dir: str) -> DataFr
     cp = _co_purchases(spark, sf_dir)
     pairs = SIM.exact_jaccard_pairs(
         cp, "o_custkey", "l_partkey", threshold=0.05,
-        max_item_freq=MAX_ITEM_FREQ, materialize_pairs=True,
+        max_item_freq=MAX_ITEM_FREQ,
     ).withColumn("jaccard", F.round("jaccard", 6))
     hist = cp.select(
         F.col("o_custkey").alias("custkey"), F.col("l_partkey").alias("item")
@@ -874,7 +874,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DD.ngram_containment_pairs(
         d, "doc_id", "text", n=3, threshold=0.6,
         max_shingle_freq=MAX_SHINGLE_FREQ,
-        materialize_pairs=True, hash_shingles=True,
+        hash_shingles=True,
     )
 
 

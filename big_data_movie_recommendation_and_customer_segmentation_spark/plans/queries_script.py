@@ -211,8 +211,7 @@ def cjk_near_duplicate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = DD.ngram_jaccard_pairs(
         routed, "doc_id", "text", n=5, threshold=0.5,
-        max_shingle_freq=MAX_SHINGLE_FREQ, materialize_pairs=True,
-        hash_shingles=True, unit="char",
+        max_shingle_freq=MAX_SHINGLE_FREQ, hash_shingles=True, unit="char",
     )
     return out.withColumn("jaccard", F.round("jaccard", 6))
 

@@ -247,6 +247,7 @@ def near_dedup_gate_writer(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         from ..operators import dedup_index as DI
+        from ..operators.relational import track_pins
 
         # index parameters + governor state read ONCE per batch and
         # threaded through both legs (r12 review: per-leg meta/hot
@@ -257,7 +258,7 @@ def near_dedup_gate_writer(
         # inside other checkpoints' lineage) is released at scope
         # exit, keeping the block manager flat across micro-batches
         # (ADVICE r14)
-        with DI.track_pins():
+        with track_pins():
             # the admission decision is the shared batch operator —
             # the gate adds only the epoch write and the upsert
             fresh = DI.minhash_index_screen(
@@ -478,14 +479,14 @@ def decontam_gate_writer(
     _fp_cache: list[str] = []
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators import dedup_index as DI
+        from ..operators.relational import track_pins
 
         spark = batch_df.sparkSession
         # the overlap probe pins its internal hits aggregate (ADVICE
         # r14 — one corpus-gram evaluation per call); the scope
         # releases that pin at batch end so the block manager stays
         # flat across micro-batches
-        with DI.track_pins():
+        with track_pins():
             overlaps = DC.decontam_index_overlaps(
                 spark, index_path, batch_df, id_col=id_col, text_col=text_col
             ).withColumnRenamed("doc", id_col)

@@ -2,9 +2,11 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import duckdb
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,6 +22,23 @@ def spark():
     s = get_spark(app_name="bdmrcs-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def unpinned(monkeypatch):
+    """Context manager for plan asserts: while it is open every
+    ``localCheckpoint`` returns its input, so a DataFrame built inside
+    keeps its whole lineage instead of a ``Scan ExistingRDD`` pin.
+    Wrap only the call that builds the asserted plan — never an index
+    build (its eager checkpoints must run) — and collect outside."""
+
+    @contextmanager
+    def scope():
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "localCheckpoint", lambda self, *a, **k: self)
+            yield
+
+    return scope
 
 
 @pytest.fixture(scope="session")

@@ -376,3 +376,23 @@ def test_index_tier_baseline_is_pinned():
     assert re.search(r"calib_wall.*\d+\.\d+", text), (
         "BASELINE.md must pin calib_wall"
     )
+
+
+def test_env_reads_only_in_session_settings():
+    """Behaviour is chosen by parameters, not environment flags: only
+    ``session.py`` reads the environment, for deployment settings
+    (core count, driver heap). An env-flag dual path elsewhere gives
+    one call two plans that no caller can see."""
+    import pathlib
+    import re
+
+    import big_data_movie_recommendation_and_customer_segmentation_spark as package
+
+    pkg = pathlib.Path(package.__file__).parent
+    env_read = re.compile(r"\bos\.(environ|getenv)\b")
+    readers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if env_read.search(p.read_text(encoding="utf-8"))
+    )
+    assert readers == ["session.py"], readers

@@ -243,23 +243,18 @@ def test_build_swap_is_crash_safe(spark, tmp_path):
     } == {1, 2}
 
 
-def test_probe_plan_is_broadcast_only(spark, sf_dir, tmp_path, monkeypatch):
+def test_probe_plan_is_broadcast_only(spark, sf_dir, tmp_path, unpinned):
     """The 100 TB shape, plan-asserted: the stored gram table meets
     the corpus explode in a BROADCAST join — no corpus-side shuffle
-    wider than its own gram relation, no CartesianProduct. The
-    materialization kill-switch keeps the probe's internal hits pin
-    un-truncated so the WHOLE lineage is visible (the
-    test_dedup_index plan-assert convention)."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
+    wider than its own gram relation, no CartesianProduct. The probe
+    is built ``unpinned`` so its internal hits pin keeps the WHOLE
+    lineage visible (the test_dedup_index plan-assert convention)."""
     bench, corpus = _split(spark, sf_dir)
     path = str(tmp_path / "plan")
     DC.build_decontam_index(bench, path)
-    plan = (
-        DC.decontam_index_overlaps(spark, path, corpus)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with unpinned():
+        probe = DC.decontam_index_overlaps(spark, path, corpus)
+    plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 

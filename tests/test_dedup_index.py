@@ -132,21 +132,19 @@ def test_estimate_rescore_matches_duckdb_signature_agreement(
 
 
 def test_bands_to_probe_prunes_partitions_and_bounds_recall(
-    spark, built, monkeypatch
+    spark, built, unpinned
 ):
     path, d, old, new = built
-    # materialization boundaries print as Scan ExistingRDD and hide
-    # the band scan; disable them for the plan assert (same reason
-    # tools/gen_plans.py sets this)
-    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
-    probed = DI.minhash_index_dedup(
-        spark, path, new, threshold=THRESH, rescore="exact", corpus_docs=old,
-        bands_to_probe=4,
-    )
+    # pins print as Scan ExistingRDD and hide the band scan; build the
+    # asserted plan with its whole lineage
+    with unpinned():
+        probed = DI.minhash_index_dedup(
+            spark, path, new, threshold=THRESH, rescore="exact", corpus_docs=old,
+            bands_to_probe=4,
+        )
     plan = probed._jdf.queryExecution().executedPlan().toString()
     part_filters = [s.split("]")[0] for s in plan.split("PartitionFilters: ")[1:]]
     assert any("band_id" in pf for pf in part_filters), part_filters
-    monkeypatch.delenv("SPARK_GRAFT_NO_MATERIALIZE")
 
     full = DI.minhash_index_dedup(
         spark, path, new, threshold=THRESH, rescore="exact", corpus_docs=old
@@ -389,16 +387,15 @@ def test_build_n_defaults_by_unit(spark, tmp_path):
     assert DI._read_meta(spark, pc).n == 5
 
 
-def test_estimate_plan_joins_are_all_broadcast(spark, built, monkeypatch):
+def test_estimate_plan_joins_are_all_broadcast(spark, built, unpinned):
     """The 100 TB contract of the query path: the stored band and
     signature tables are only ever probed by BROADCAST joins (batch
     side broadcast) — a SortMergeJoin/ShuffledHashJoin here would
     shuffle corpus-sized state per batch."""
     path, d, old, new = built
-    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
-    q = DI.minhash_index_dedup(spark, path, new, threshold=THRESH, rescore="estimate")
+    with unpinned():
+        q = DI.minhash_index_dedup(spark, path, new, threshold=THRESH, rescore="estimate")
     plan = q._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.delenv("SPARK_GRAFT_NO_MATERIALIZE")
     assert plan.count("BroadcastHashJoin") >= 3
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan

@@ -184,7 +184,7 @@ def test_route_by_script_matches_inline_predicate(spark):
     routes exactly like the inline `dominant_script(...)` filter —
     the plan-shape fix for the ~20× predicate-pushdown re-inlining of
     expensive text derivations (see its docstring) must be
-    value-neutral. Covers both materialize settings."""
+    value-neutral."""
     from big_data_movie_recommendation_and_customer_segmentation_spark.operators import dedup as DD
 
     rows = [(k, t) for k, t, _ in CASES]
@@ -193,14 +193,11 @@ def test_route_by_script_matches_inline_predicate(spark):
         (r["k"], r["d"])
         for r in df.select("k", TX.dominant_script("t").alias("d")).collect()
     }
-    for mat in (True, False):
-        routed = DD.route_by_script(df, "t", materialize=mat)
-        got = {(r["k"], r["dominant_script"]) for r in routed.collect()}
-        assert got == want
-        unseg = routed.filter(
-            F.col("dominant_script").isin(*TX.UNSEGMENTED_SCRIPTS)
-        )
-        assert {r["k"] for r in unseg.collect()} == {"ja", "ko", "extb", "th", "lo", "my", "km"}
+    routed = DD.route_by_script(df, "t")
+    got = {(r["k"], r["dominant_script"]) for r in routed.collect()}
+    assert got == want
+    unseg = routed.filter(F.col("dominant_script").isin(*TX.UNSEGMENTED_SCRIPTS))
+    assert {r["k"] for r in unseg.collect()} == {"ja", "ko", "extb", "th", "lo", "my", "km"}
 
 
 def test_pre_stripped_dominant_script_is_value_identical(spark):

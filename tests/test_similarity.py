@@ -134,3 +134,42 @@ def test_twins_correlate_more_than_random_pairs_planted(spark):
     )
     assert twin_corr is not None and rand_corr is not None
     assert twin_corr > rand_corr, f"twins {twin_corr} should beat random {rand_corr}"
+
+
+def test_track_pins_releases_set_miner_pins(spark):
+    """The set miners always pin their shared relations; a
+    ``track_pins`` scope must release every one of those pins, or a
+    per-batch caller (the streaming dedup gate's within-batch screen)
+    leaks one pinned RDD per call."""
+    from big_data_movie_recommendation_and_customer_segmentation_spark.operators import dedup as DD
+    from big_data_movie_recommendation_and_customer_segmentation_spark.operators.relational import (
+        track_pins,
+    )
+
+    # "hot" is in every doc (dropped by the governor); docs d and d+3
+    # share four group shingles, Jaccard 4/6
+    sets = spark.createDataFrame(
+        [
+            (d, s)
+            for d in range(6)
+            for s in ["hot", f"own{d}"] + [f"g{d % 3}_{i}" for i in range(4)]
+        ],
+        "doc long, shingle string",
+    )
+
+    def _ids():
+        # id SET, not count: the async ContextCleaner may reclaim
+        # other tests' dead pins mid-test, shrinking a raw count
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return set(jmap.keySet().toArray())
+
+    base = _ids()
+    with track_pins():
+        mh = DD.minhash_set_pairs(sets, threshold=0.5, max_item_freq=5).collect()
+        ex = SIM.exact_jaccard_pairs(sets, "doc", "shingle", threshold=0.5, max_item_freq=5).collect()
+        # minhash: pre-governor, post-governor and candidate pins;
+        # exact: pre-governor and sized pins
+        assert len(_ids() - base) >= 5
+    assert len(mh) == len(ex) == 3
+    leaked = _ids() - base
+    assert not leaked, f"track_pins left pinned RDDs: {leaked}"

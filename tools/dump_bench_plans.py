@@ -3,9 +3,8 @@ into plans/r15/<query>_<tag>.txt (optimization-round evidence).
 
     python tools/dump_bench_plans.py <tag> [sf_dir] [query ...]
 
-Runs with SPARK_GRAFT_NO_MATERIALIZE=1 so localCheckpoint boundaries
-do not hide upstream lineage (same convention as tools/gen_plans.py);
-production keeps the boundaries. Planning only — nothing executes.
+Lazy pins and checkpoints print as `Scan ExistingRDD`, as in
+production. Planning only — nothing executes.
 """
 
 from __future__ import annotations
@@ -14,8 +13,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
 
 import bench as benchmod
 import __spark_entry__ as entrymod
@@ -42,7 +39,7 @@ def main() -> None:
         text = df._jdf.queryExecution().explainString(mode)
         path = os.path.join(OUT, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(f"# {name} @ {sf_dir} ({tag}); SPARK_GRAFT_NO_MATERIALIZE=1\n")
+            f.write(f"# {name} @ {sf_dir} ({tag})\n")
             f.write(text)
         n_ex = text.count("Exchange")
         print(f"{name}: {n_ex} Exchange, wrote {os.path.relpath(path, REPO)}")

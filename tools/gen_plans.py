@@ -8,11 +8,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Render the FULL lineage: with materialization on, the checkpoint
-# boundary prints as `Scan ExistingRDD`, hiding the scans/joins these
-# docs exist to show. Production keeps the boundary (PERF.md).
-os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
-
 import __spark_entry__ as entrymod
 from big_data_movie_recommendation_and_customer_segmentation_spark import get_spark
 
@@ -50,7 +45,7 @@ NOTES = {
     "doc_encoding_quality": "Encoding QA (r12): three one-regex-scan damage counts per doc, map-local; integer partial aggregates into a 4-value leg key — the scan dominates at any scale.",
     "incremental_dedup_pairs": "Persisted-index probe (r13): the BATCH's band rows broadcast against the stored band table (corpus side is a parquet scan + BroadcastHashJoin — zero corpus shuffle), candidate ids broadcast-semi into stored sigs, 32-way agreement sum in codegen. Index size never rides a shuffle; query cost tracks candidate density.",
     "repeated_substring_spans": "Substring dedup (r13): per-position k-gram hash explode, doc-keyed winnow window (one Exchange on doc), 60-bit fingerprint self-join, exact k-gram verify against the two doc texts, same-diagonal chain windows keyed by (doc_a, doc_b, diag) — no SinglePartition anywhere.",
-    "decontam_index_overlaps": "Decontam index probe (r15): ONE corpus explode + distinct feeding a BroadcastHashJoin against the stored gram table, doc-keyed hit agg (rendered un-pinned here; production pins it — Scan ExistingRDD boundary), then the flagged set broadcast-LeftSemi prunes the corpus BEFORE the candidate-bounded denominator re-gram.",
+    "decontam_index_overlaps": "Decontam index probe (r15): ONE corpus explode + distinct feeding a BroadcastHashJoin against the stored gram table, doc-keyed hit agg (pinned — Scan ExistingRDD boundary), then the flagged set broadcast-LeftSemi prunes the corpus BEFORE the candidate-bounded denominator re-gram.",
     "spfhp_pack_assignments": "SPFHP packing (r15): bounded histogram collect feeds the driver-side greedy; slotting is a row_number window PARTITIONED BY length (parallel across length classes) + a broadcast demand-table join with rank-range routing — no SinglePartition exchange.",
     "corpus_slice_lineage": "Corpus lineage (r15): two per-slice XOR-fingerprint aggs (partial XOR rides the shuffle, one row per slice), screen subtree pruned by the broadcast flagged set, unhinted slice-key join (AQE broadcasts the sane case).",
     "mixture_epoch_materialization": "Mixture materialization (r15): the #langs-row allocation (temperature plan + milli-epoch quantization) broadcasts into the corpus scan; epoch expansion is a Generate (sequence explode) and the fractional-epoch gate an md5 filter — zero data shuffles before the final counting agg.",
@@ -67,10 +62,8 @@ def main() -> None:
         "Generated from `df.explain('formatted')` at sf0.01. Regenerate:",
         "`python tools/gen_plans.py` (or the snippet in git history).",
         "",
-        "Rendered with SPARK_GRAFT_NO_MATERIALIZE=1 so the full lineage",
-        "shows; in production the set-similarity queries insert a",
-        "localCheckpoint boundary after the governed pair relation",
-        "(prints as `Scan ExistingRDD`; measured 3x — see PERF.md).",
+        "Lazy pins and checkpoints print as `Scan ExistingRDD`: the plan",
+        "below each boundary runs once and every consumer reads its copy.",
         "",
     ]
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -108,7 +108,6 @@ def main() -> None:
                 DD.minhash_duplicate_pairs(
                     spark, docs, "doc_id", "text", n=3, threshold=0.5,
                     num_perm=32, band_rows=2, seed=42, max_shingle_freq=GOV,
-                    materialize_pairs=True,
                 )
                 .filter((F.col("doc_a") % 100 == 0) != (F.col("doc_b") % 100 == 0))
                 .count()
