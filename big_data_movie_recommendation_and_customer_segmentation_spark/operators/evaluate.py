@@ -3,70 +3,125 @@
 The reference mixes two APIs: RDD-based ``mllib RankingMetrics`` fed
 by a pickled row-lambda (``popularity_evalutaion.py:62-70`` — a
 JVM→Python-worker round trip per row) and the DataFrame-native
-``RankingEvaluator`` (``popularity_tuned.py:71-73``). The engine
-pins everything to the DataFrame evaluators — no Python-worker hop —
-and hand-verifies metric definitions on a micro-fixture
-(SURVEY §7 hard-part 3: mllib vs ml differ subtly on truncation).
+``RankingEvaluator`` (``popularity_tuned.py:71-73``), which runs one
+RDD pass per metric. The engine computes all three ranking metrics
+with array higher-order functions inside ONE grouped aggregate, so a
+whole evaluation — any number of (holdout, bias, …) slices — is one
+plan and one ``collect``, with no Python-worker hop and no pyspark.ml
+import. The definitions are mllib's ``RankingMetrics`` exactly
+(hand-verified on a micro-fixture and checked against
+``RankingEvaluator`` on a seeded random fixture; SURVEY §7 hard-part
+3: mllib vs ml differ subtly on truncation).
 """
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_METRICS = ("precision_at_k", "map", "ndcg_at_k")
 
-def _joined_lists(predicted: DataFrame, actual: DataFrame) -> DataFrame:
-    """Inner-join per-user prediction/truth lists (C2,
-    ``popularity_evalutaion.py:62``) and cast item lists to double —
-    RankingEvaluator consumes array<double>."""
-    return (
-        predicted.join(actual, "user")
-        .filter(F.size("actual") > 0)
-        .select(
-            F.col("user"),
-            F.col("predicted").cast("array<double>").alias("predicted"),
-            F.col("actual").cast("array<double>").alias("actual"),
-        )
+
+def _user_metrics(k: int) -> list:
+    """Per-user precision@k, AP and NDCG@k from ``_h`` (1 where the
+    ranked prediction at that position is in the truth set, else 0)
+    and ``_a`` (the distinct truth items), as mllib ``RankingMetrics``
+    defines them:
+
+    - precision@k: hits in the first k predictions over k, even when
+      the list is shorter than k;
+    - AP: over the FULL predicted list, Σ (hits so far)/(rank) at each
+      hit, over |actual|;
+    - NDCG@k: binary gain with a 1/ln(i+2) discount at 0-based rank
+      i; the ideal DCG fills min(k, |actual|) ranks.
+
+    Every occurrence of a relevant item is a hit, so a duplicated
+    prediction counts each time it appears. The sums run rank by rank
+    in the same order as mllib's loops."""
+    head = f"slice(_h, 1, {k})"
+    p_at_k = F.expr(f"aggregate({head}, 0, (c, h) -> c + h) / {k}")
+    ap = F.expr(
+        "aggregate(_h, named_struct('c', 0, 'i', 0, 's', 0D), "
+        "(acc, h) -> named_struct('c', acc.c + h, 'i', acc.i + 1, "
+        "'s', acc.s + IF(h = 1, (acc.c + 1) / (acc.i + 1), 0D)), acc -> acc.s) / size(_a)"
     )
+    dcg = (
+        f"aggregate({head}, named_struct('i', 0, 's', 0D), "
+        "(acc, h) -> named_struct('i', acc.i + 1, 's', acc.s + IF(h = 1, 1D / ln(acc.i + 2), 0D)), "
+        "acc -> acc.s)"
+    )
+    idcg = f"aggregate(sequence(0, least(size(_a), {k}) - 1), 0D, (s, i) -> s + 1D / ln(i + 2))"
+    ndcg = F.expr(f"{dcg} / {idcg}")
+    return [p_at_k.alias("precision_at_k"), ap.alias("map"), ndcg.alias("ndcg_at_k")]
+
+
+def ranking_metrics_by(
+    predicted: DataFrame, actual: DataFrame, keys: Sequence[str], k: int = 100
+) -> dict[tuple, dict[str, float]]:
+    """precisionAtK / MAP / ndcgAtK per ``keys`` slice — K7/K8
+    (``popularity_evalutaion.py:67-70``, ``popularity_tuned.py:71-73``,
+    ``als_latent_factors.py:60-64``).
+
+    ``predicted`` is (user, predicted[] ranked, …) and ``actual`` is
+    (user, actual[], …); each may carry some of the ``keys`` columns.
+    They join on ``user`` plus the keys both carry, so a key on one
+    side only scores that side's lists against every matching list of
+    the other (val and test truth against one prediction list). Users
+    with an empty truth list are dropped.
+
+    One grouped aggregate over array higher-order functions and one
+    ``collect``. Returns {key values tuple: {n_users, precision_at_k,
+    map, ndcg_at_k}}; a slice with no users is absent.
+    """
+    on = ["user"] + [c for c in keys if c in predicted.columns and c in actual.columns]
+    return list_metrics(predicted.join(actual, on), keys, k)
+
+
+def list_metrics(lists: DataFrame, keys: Sequence[str], k: int = 100) -> dict[tuple, dict[str, float]]:
+    """``ranking_metrics_by`` on a frame that already pairs each
+    ``predicted`` list with its ``actual`` list (one row per user and
+    slice): the aggregate and the ``collect`` without the join."""
+    keys = list(keys)
+    truth = lists.select(
+        *keys,
+        F.col("predicted").cast("array<double>").alias("_p"),
+        F.array_distinct(F.col("actual").cast("array<double>")).alias("_a"),
+    ).filter(F.size("_a") > 0)
+    # the hit flags are computed once and read by all three metrics
+    hits = truth.select(*keys, "_a", F.expr("transform(_p, x -> IF(array_contains(_a, x), 1, 0))").alias("_h"))
+    per_user = hits.select(*keys, *_user_metrics(k))
+    rows = per_user.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("double").alias("n_users"), *[F.avg(m).alias(m) for m in _METRICS]
+    ).collect()
+    # with no keys the aggregate is global: one row even over no users
+    return {
+        tuple(r[c] for c in keys): {m: float(r[m]) for m in ("n_users",) + _METRICS}
+        for r in rows
+        if r["n_users"]
+    }
+
+
+def empty_metrics() -> dict[str, float]:
+    """The metrics of an evaluation slice with no users: NaN, not an
+    error — a pipeline over a filtered holdout degrades, not crashes."""
+    return {"n_users": 0.0} | dict.fromkeys(_METRICS, math.nan)
 
 
 def ranking_metrics(predicted: DataFrame, actual: DataFrame, k: int = 100) -> dict[str, float]:
-    """precisionAtK / MAP / ndcgAtK on (user, predicted[]) vs
-    (user, actual[]) — K7/K8 (``popularity_evalutaion.py:67-70``,
-    ``popularity_tuned.py:71-73``, ``als_latent_factors.py:60-64``).
-
-    Three evaluator passes over one cached join; each is a single
-    aggregate on pre-grouped lists, so the expensive part (building
-    the lists) is paid once upstream.
-    """
-    from pyspark.ml.evaluation import RankingEvaluator
-
-    joined = _joined_lists(predicted, actual).cache()
-    try:
-        out: dict[str, float] = {"n_users": float(joined.count())}
-        if out["n_users"] == 0:
-            # RankingEvaluator raises "empty collection" on an empty
-            # eval slice — a pipeline over a filtered holdout must
-            # degrade to NaN metrics, not crash the job.
-            return out | {"precision_at_k": float("nan"), "map": float("nan"), "ndcg_at_k": float("nan")}
-        for metric, param in (
-            ("precision_at_k", {"metricName": "precisionAtK", "k": k}),
-            ("map", {"metricName": "meanAveragePrecision"}),
-            ("ndcg_at_k", {"metricName": "ndcgAtK", "k": k}),
-        ):
-            ev = RankingEvaluator(predictionCol="predicted", labelCol="actual", **param)
-            out[metric] = ev.evaluate(joined)
-        return out
-    finally:
-        joined.unpersist()
+    """``ranking_metrics_by`` with no keys: one metric dict over all
+    users (NaN metrics and ``n_users`` 0 when no user is left)."""
+    return ranking_metrics_by(predicted, actual, [], k).get((), empty_metrics())
 
 
 def rmse(predictions: DataFrame, label_col: str = "rating", prediction_col: str = "prediction") -> float:
-    """Regression RMSE (K9, ``als_latent_factors.py:97-100``)."""
-    from pyspark.ml.evaluation import RegressionEvaluator
-
-    ev = RegressionEvaluator(metricName="rmse", labelCol=label_col, predictionCol=prediction_col)
-    return ev.evaluate(predictions)
+    """Regression RMSE (K9, ``als_latent_factors.py:97-100``): one
+    aggregate, sqrt(avg((label − prediction)²)); NaN on no rows."""
+    err = F.col(label_col).cast("double") - F.col(prediction_col).cast("double")
+    out = predictions.select(F.sqrt(F.avg(err * err))).first()[0]
+    return math.nan if out is None else float(out)
 
 
 def binary_auc(

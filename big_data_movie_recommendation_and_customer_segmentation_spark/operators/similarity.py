@@ -14,9 +14,11 @@ Two paths, mirroring SURVEY §2.C6/§2.K:
   hot item explodes it; ``max_item_freq`` prunes those (the standard
   prefix-filter trick) — at 100 TB run it only on pruned inputs or
   use the LSH path.
-- ``minhash_lsh_pairs`` — pyspark.ml MinHashLSH band-bucket join;
-  candidate pairs only bucket-collide, so cost tracks true-similar
-  density, not N². The scale path.
+- ``minhash_lsh_pairs`` — MinHash LSH on column ops (one min-hash
+  per band, the ``dedup.minhash_set_pairs`` miner); candidate pairs
+  only bucket-collide, so cost tracks true-similar density, not N².
+  The scale path. No pyspark.ml: no vocabulary fit, no driver-held
+  item dictionary.
 """
 
 from __future__ import annotations
@@ -157,54 +159,28 @@ def minhash_lsh_pairs(
 
     Replaces the reference's driver-side datasketch pipeline
     (``top_100_pairs.py:54-94``: MinHash(num_perm=32) per user,
-    MinHashLSH(threshold=0.5) dict index, per-user queries) with
-    ``pyspark.ml.feature.MinHashLSH.approxSimilarityJoin`` — the
-    band-bucket shuffle join runs on executors and never materializes
-    N² candidates.
+    MinHashLSH(threshold=0.5) dict index, per-user queries) with the
+    column-op miner ``dedup.minhash_set_pairs``: ``num_hash_tables``
+    bands of one min-hash each, so a pair collides with probability
+    1−(1−J)^T, the collision law of T ``MinHashLSH`` tables — without
+    its ``CountVectorizer`` fit (a driver-held vocabulary), string
+    item ids, or a self-join carrying whole row structs.
 
     Signature parity is impossible (different hash families — SURVEY
-    §7 hard-part 2); semantic parity is what's tested: emitted pairs
-    are exactly those with estimated Jaccard ≥ threshold, and callers
-    rescore exactly with ``exact_jaccard_pairs`` semantics via the
-    returned ``jaccard`` column (computed from the true sets here).
+    §7 hard-part 2); semantic parity is what's tested: every emitted
+    pair is rescored from the true sets and kept iff its exact
+    Jaccard ≥ threshold, inclusive as in ``exact_jaccard_pairs``.
 
     Output columns match ``exact_jaccard_pairs``.
     """
-    from pyspark.ml.feature import CountVectorizer, MinHashLSH
+    # dedup imports this module, so the import is local
+    from .dedup import minhash_set_pairs
 
-    sets = (
-        user_item_pairs(df, user_col, item_col)
-        .groupBy("user")
-        .agg(F.collect_set(F.col("item").cast("string")).alias("items"))
+    sets = df.select(F.col(user_col).alias("doc"), F.col(item_col).alias("shingle"))
+    pairs = minhash_set_pairs(
+        sets, threshold=threshold, num_perm=num_hash_tables, band_rows=1, seed=seed
     )
-    # CountVectorizer(binary) → sparse indicator vector per user; the
-    # fitted vocab is the item dictionary (bounded: |items| ≪ rows).
-    cv = CountVectorizer(inputCol="items", outputCol="features", binary=True)
-    model = cv.fit(sets)
-    feats = model.transform(sets).select("user", "items", "features")
-
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
-    lsh_model = lsh.fit(feats)
-    joined = lsh_model.approxSimilarityJoin(feats, feats, 1.0 - threshold, distCol="dist")
-    pairs = (
-        joined.filter(F.col("datasetA.user") < F.col("datasetB.user"))
-        .select(
-            F.col("datasetA.user").alias("user_a"),
-            F.col("datasetB.user").alias("user_b"),
-            F.col("datasetA.items").alias("_items_a"),
-            F.col("datasetB.items").alias("_items_b"),
-        )
-    )
-    # exact rescore from the true sets (cheap: pairs ≪ rows)
-    inter = F.size(F.array_intersect("_items_a", "_items_b"))
-    return pairs.select(
-        "user_a",
-        "user_b",
-        inter.alias("n_common"),
-        F.size("_items_a").alias("n_a"),
-        F.size("_items_b").alias("n_b"),
-        (inter / (F.size("_items_a") + F.size("_items_b") - inter)).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return pairs.withColumnRenamed("doc_a", "user_a").withColumnRenamed("doc_b", "user_b")
 
 
 def pair_rating_correlation(
@@ -363,6 +339,32 @@ def random_pair_baseline(
 
     Output: trial, n_pairs_scored, avg_corr.
     """
+    all_pairs = _random_trial_pairs(ratings, user_col, n_pairs, n_trials, sample_size, seed, pairing)
+    corr_fn = pair_rating_correlation_exact if exact_int_moments else pair_rating_correlation
+    corrs = corr_fn(
+        ratings, all_pairs.select("user_a", "user_b").distinct(), user_col, item_col, rating_col
+    )
+    return (
+        all_pairs.join(corrs, ["user_a", "user_b"])
+        .groupBy("trial")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs_scored"),
+            F.avg("corr").alias("avg_corr"),
+        )
+    )
+
+
+def _random_trial_pairs(
+    ratings: DataFrame,
+    user_col: str,
+    n_pairs: int,
+    n_trials: int,
+    sample_size: int,
+    seed: int,
+    pairing: str,
+) -> DataFrame:
+    """The null model's (trial, user_a < user_b) pairs; see
+    ``random_pair_baseline`` for ``pairing``."""
     from ..functions.textops import shared_token_hash
 
     if pairing == "hash":
@@ -396,12 +398,12 @@ def random_pair_baseline(
         right = shuffled.filter(F.col("_rn") % 2 == 0).select(
             "trial", (F.col("_rn") / 2).cast("long").alias("pid"), F.col("u").alias("user_b")
         )
-        all_pairs = left.join(right, ["trial", "pid"]).select(
+        return left.join(right, ["trial", "pid"]).select(
             "trial",
             F.least("user_a", "user_b").alias("user_a"),
             F.greatest("user_a", "user_b").alias("user_b"),
         )
-    elif pairing == "rand":
+    if pairing == "rand":
         def seeded(s: int) -> list[Column]:
             return [F.xxhash64(F.lit(s), F.col("u")), F.col("u")]
 
@@ -433,18 +435,5 @@ def random_pair_baseline(
         all_pairs = trials[0]
         for t_df in trials[1:]:
             all_pairs = all_pairs.unionByName(t_df)
-    else:
-        raise ValueError(f"pairing must be 'rand' or 'hash', got {pairing!r}")
-
-    corr_fn = pair_rating_correlation_exact if exact_int_moments else pair_rating_correlation
-    corrs = corr_fn(
-        ratings, all_pairs.select("user_a", "user_b").distinct(), user_col, item_col, rating_col
-    )
-    return (
-        all_pairs.join(corrs, ["user_a", "user_b"])
-        .groupBy("trial")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs_scored"),
-            F.avg("corr").alias("avg_corr"),
-        )
-    )
+        return all_pairs
+    raise ValueError(f"pairing must be 'rand' or 'hash', got {pairing!r}")

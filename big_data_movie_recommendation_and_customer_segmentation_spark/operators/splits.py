@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .relational import filter_active
-
 TRAIN, VAL, TEST = "train", "val", "test"
 
 
@@ -33,16 +31,17 @@ def chronological_fifths(
     (SURVEY §7 hard-part 4; the reference orders by timestamp alone,
     ``partition.py:23``).
 
-    Shuffle: one exchange on ``user_col`` shared by the count window
-    and the row_number window (same partition key). The reference
-    instead ran groupBy-count + join + window = two extra exchanges.
+    Shuffle: one exchange on ``user_col`` shared by the count window,
+    the ``min_rows_per_user`` filter on that count, and the
+    row_number window (same partition key). The reference instead ran
+    groupBy-count + join + window = two extra exchanges.
     """
-    df = filter_active(df, user_col, min_rows_per_user)
     w_order = Window.partitionBy(user_col).orderBy(F.col(time_col).asc(), F.col(tiebreak_col).asc())
     w_all = Window.partitionBy(user_col)
     return (
         df.withColumn("_rn", F.row_number().over(w_order))
         .withColumn("_n", F.count(F.lit(1)).over(w_all))
+        .filter(F.col("_n") >= min_rows_per_user)
         .withColumn(
             bucket_col,
             F.floor((F.col("_rn") - F.lit(1)) / F.col("_n") * F.lit(5)).cast("int"),

@@ -99,17 +99,3 @@ def lint_plan(df: DataFrame) -> list[dict]:
         if n:
             findings.append({"rule": rule, "message": message, "count": n})
     return findings
-
-
-def lint_registry(spark, sf_dir: str, names=None) -> dict[str, list[dict]]:
-    """Lint every (or the given) registry query's physical plan.
-    Returns only the queries with findings — the sweep test asserts
-    this against the documented allowlist."""
-    from . import QUERY_REGISTRY
-
-    out: dict[str, list[dict]] = {}
-    for name in names or QUERY_REGISTRY:
-        findings = lint_plan(QUERY_REGISTRY[name](spark, sf_dir))
-        if findings:
-            out[name] = findings
-    return out

@@ -771,9 +771,10 @@ def minhash_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-prefix base hash and inlined seeded universal-hash
     coefficients, DuckDB rebuilds identical signatures, bands them
     identically, and must emit the same candidate∩rescore pairs.
-    The pyspark.ml MinHashLSH variant (different hash family, not
-    SQL-reproducible) remains covered by the subset/recall property
-    tests in tests/test_similarity.py."""
+    ``similarity.minhash_lsh_pairs`` (the same miner with one
+    min-hash per band and the xxhash64 base hash, not
+    SQL-reproducible) is covered by the subset/recall property tests
+    in tests/test_similarity.py."""
     from ..operators import dedup as DD
 
     cp = _co_purchases(spark, sf_dir)

@@ -46,6 +46,28 @@ def sf_dir() -> str:
     return TEST_SF_DIR
 
 
+class _RegistryFrames(dict):
+    """name -> the registry query's DataFrame at sf0.001, built on
+    first access and kept for the session."""
+
+    def __init__(self, spark):
+        super().__init__()
+        self.spark = spark
+
+    def __missing__(self, name):
+        from big_data_movie_recommendation_and_customer_segmentation_spark.plans import QUERY_REGISTRY
+
+        df = self[name] = QUERY_REGISTRY[name](self.spark, "/root/testdata/sf0.001")
+        return df
+
+
+@pytest.fixture(scope="session")
+def registry_frames(spark):
+    """Registry query frames shared by the plan-lint sweep and the
+    gated flat-schema check, so no query plan is built twice."""
+    return _RegistryFrames(spark)
+
+
 def make_duckdb(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     for t in TABLES:

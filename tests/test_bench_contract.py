@@ -294,7 +294,7 @@ def test_family_map_covers_the_whole_registry():
     assert not ghosts, f"family map names not in registry: {sorted(ghosts)}"
 
 
-def test_gated_queries_emit_only_flat_schemas(spark):
+def test_gated_queries_emit_only_flat_schemas(registry_frames):
     """The driver's pandas canonicalizer cannot sort list cells — a
     gated query emitting array/map/struct columns crashes its
     correctness row outright (r05: pq_codes, 'unhashable type:
@@ -303,14 +303,11 @@ def test_gated_queries_emit_only_flat_schemas(spark):
     only: no jobs beyond bounded probes."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from big_data_movie_recommendation_and_customer_segmentation_spark.plans import (
-        GATE_PRIORITY,
-        QUERY_REGISTRY,
-    )
+    from big_data_movie_recommendation_and_customer_segmentation_spark.plans import GATE_PRIORITY
 
     offenders = {}
     for name in GATE_PRIORITY:
-        df = QUERY_REGISTRY[name](spark, "/root/testdata/sf0.001")
+        df = registry_frames[name]
         complex_cols = [
             f.name
             for f in df.schema.fields

@@ -94,3 +94,69 @@ def test_rmse_hand_computed(spark):
     )
     # errors 1, 0, 1 → rmse = sqrt(2/3)
     assert EV.rmse(preds) == pytest.approx((2 / 3) ** 0.5, abs=1e-9)
+
+
+@pytest.fixture(scope="module")
+def random_lists(spark):
+    """Seeded random (user, predicted) / (user, part, actual) lists with
+    duplicated items, empty lists, and lists both shorter and longer
+    than the k values below."""
+    import random
+
+    rng = random.Random(20240817)
+    pred, act = [], []
+    for u in range(240):
+        pred.append((u, [float(rng.randrange(30)) for _ in range(rng.randrange(0, 14))]))
+        for part in ("a", "b"):
+            act.append((u, part, [float(rng.randrange(30)) for _ in range(rng.randrange(0, 9))]))
+    return (
+        spark.createDataFrame(pred, "user int, predicted array<double>"),
+        spark.createDataFrame(act, "user int, part string, actual array<double>"),
+    )
+
+
+def _evaluator_metrics(joined, k):
+    """The pyspark.ml reference: one RankingEvaluator pass per metric
+    over users with a non-empty truth list."""
+    from pyspark.ml.evaluation import RankingEvaluator
+    from pyspark.sql import functions as F
+
+    joined = joined.filter(F.size("actual") > 0)
+    out = {"n_users": float(joined.count())}
+    for metric, param in (
+        ("precision_at_k", {"metricName": "precisionAtK", "k": k}),
+        ("map", {"metricName": "meanAveragePrecision"}),
+        ("ndcg_at_k", {"metricName": "ndcgAtK", "k": k}),
+    ):
+        ev = RankingEvaluator(predictionCol="predicted", labelCol="actual", **param)
+        out[metric] = ev.evaluate(joined)
+    return out
+
+
+@pytest.mark.parametrize("k", [1, 5, 20])
+def test_ranking_metrics_match_ranking_evaluator(random_lists, k):
+    """The aggregate's metrics equal RankingEvaluator's to 1e-12, per
+    keyed slice and with no keys (k=20 is longer than every list)."""
+    from pyspark.sql import functions as F
+
+    pred, act = random_lists
+    by_part = EV.ranking_metrics_by(pred, act, ["part"], k)
+    assert sorted(by_part) == [("a",), ("b",)]
+    for part in ("a", "b"):
+        joined = pred.join(act.filter(F.col("part") == part), "user")
+        ref = _evaluator_metrics(joined, k)
+        assert by_part[(part,)] == pytest.approx(ref, abs=1e-12, rel=0)
+    one = act.filter(F.col("part") == "a").drop("part")
+    assert EV.ranking_metrics(pred, one, k) == pytest.approx(by_part[("a",)], abs=1e-12, rel=0)
+
+
+def test_ranking_metrics_no_users_is_nan(spark):
+    """An evaluation slice with no users left degrades to NaN metrics,
+    not an error."""
+    import math
+
+    pred = spark.createDataFrame([(1, [1.0])], "user int, predicted array<double>")
+    act = spark.createDataFrame([(2, [1.0]), (1, [])], "user int, actual array<double>")
+    m = EV.ranking_metrics(pred, act, k=3)
+    assert m["n_users"] == 0
+    assert all(math.isnan(m[k]) for k in ("precision_at_k", "map", "ndcg_at_k"))

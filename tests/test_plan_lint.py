@@ -80,7 +80,8 @@ def test_scalar_aggregate_gather_clean(spark):
     assert "single_partition" not in _rules(L.lint_plan(df))
 
 
-def test_registry_sweep_matches_allowlist(spark):
-    res = L.lint_registry(spark, "/root/testdata/sf0.001")
-    got = {name: _rules(f) for name, f in res.items()}
+def test_registry_sweep_matches_allowlist(registry_frames):
+    from big_data_movie_recommendation_and_customer_segmentation_spark.plans import QUERY_REGISTRY
+
+    got = {name: _rules(f) for name in QUERY_REGISTRY if (f := L.lint_plan(registry_frames[name]))}
     assert got == ALLOWED, f"plan-lint drift: {got}"

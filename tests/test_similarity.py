@@ -173,3 +173,20 @@ def test_track_pins_releases_set_miner_pins(spark):
     assert len(mh) == len(ex) == 3
     leaked = _ids() - base
     assert not leaked, f"track_pins left pinned RDDs: {leaked}"
+
+
+def test_lsh_threshold_is_inclusive(spark):
+    """A pair at exactly J = threshold is a similar pair on both paths:
+    users 1 and 2 share 3 of 6 items (J = 0.5), users 1 and 3 share 2
+    of 6 (J = 1/3, below)."""
+    sets = {1: [1, 2, 3, 4], 2: [1, 2, 3, 5, 6], 3: [1, 2, 7, 8]}
+    df = spark.createDataFrame(
+        [(u, i) for u, items in sets.items() for i in items], "user long, item long"
+    )
+    exact = {(r.user_a, r.user_b): r.jaccard for r in SIM.exact_jaccard_pairs(df, "user", "item", 0.5).collect()}
+    lsh = {
+        (r.user_a, r.user_b): r.jaccard
+        for r in SIM.minhash_lsh_pairs(spark, df, "user", "item", threshold=0.5).collect()
+    }
+    assert exact == {(1, 2): 0.5}
+    assert lsh == exact
