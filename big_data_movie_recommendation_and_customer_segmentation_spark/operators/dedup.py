@@ -233,8 +233,10 @@ def minhash_signatures(
             for i, (a, b) in enumerate(coeffs)
         ],
     )
-    aggs = [F.expr(f"min(h{i}) AS h{i}") for i in range(num_perm)]
-    return hashed.groupBy("doc").agg(*aggs)
+    # the num_perm mins as ONE parsed aggregate expression (a struct
+    # the final projection unnests), not num_perm F.expr calls
+    mins = ", ".join(f"'h{i}', min(h{i})" for i in range(num_perm))
+    return hashed.groupBy("doc").agg(F.expr(f"named_struct({mins}) AS _m")).select("doc", "_m.*")
 
 
 def minhash_duplicate_pairs(

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _shingle_pairs, banded_signature_rows, minhash_signatures
-from .relational import _pin, _release_pin, track_pins
+from .relational import _pin, track_pins
 from .vectorops import _hadoop_delete, _hadoop_fs, pin_empty_partition
 
 
@@ -64,18 +64,41 @@ def _maybe_bcast(df: DataFrame, flag: bool) -> DataFrame:
     return F.broadcast(df) if flag else df
 
 
+# the frozen knob tuple ``build_minhash_index`` writes to ``meta/``
+_META_SCHEMA = (
+    "num_perm int, band_rows int, seed int, base_hash string, "
+    "n int, unit string, max_shingle_freq int"
+)
+
+
 def _read_meta(spark: SparkSession, path: str):
     """Driver-side ``.collect()`` bounded by construction: ``meta/``
     holds exactly ONE row (the frozen knob tuple ``build`` writes) at
-    any corpus scale — O(1), not O(index)."""
-    return spark.read.parquet(f"{path}/meta").collect()[0]
+    any corpus scale — O(1), not O(index). Read with its fixed schema:
+    one job (the collect), no schema-inference job before it."""
+    return spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
 
 
-def _hot_shingles(spark: SparkSession, path: str) -> DataFrame | None:
+def _hot_shingles(spark: SparkSession, path: str, meta=None) -> DataFrame | None:
+    """The frozen governor set, or None for an ungoverned index. Given
+    a text index's ``meta``, the read skips schema inference: text
+    units shingle to strings. A set-input index stores its raw item
+    type, which only the files know."""
     fs, hpath = _hadoop_fs(spark, f"{path}/hot_shingles")
-    if fs.exists(hpath):
-        return spark.read.parquet(f"{path}/hot_shingles")
-    return None
+    if not fs.exists(hpath):
+        return None
+    text = meta is not None and meta.unit != "items"
+    reader = spark.read.schema("shingle string") if text else spark.read
+    return reader.parquet(f"{path}/hot_shingles")
+
+
+def _read_bands(spark: SparkSession, path: str, sigs: DataFrame, meta) -> DataFrame:
+    """``bands/`` read with the schema it shares with ``sigs`` (the
+    corpus id type, band_rows bigint values, the int ``band_id``
+    partition): no schema-inference job of its own."""
+    doc = sigs.schema["doc"].dataType.simpleString()
+    values = ", ".join(f"v{r} bigint" for r in range(meta.band_rows))
+    return spark.read.schema(f"doc {doc}, {values}, band_id int").parquet(f"{path}/bands")
 
 
 def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
@@ -136,7 +159,8 @@ def load_index_state(spark: SparkSession, path: str):
     negligible next to any Spark job."""
     _recover_build(spark, path)
     _recover_compaction(spark, path)
-    return _read_meta(spark, path), _hot_shingles(spark, path)
+    meta = _read_meta(spark, path)
+    return meta, _hot_shingles(spark, path, meta)
 
 
 def minhash_index_fingerprint(spark: SparkSession, path: str) -> str:
@@ -288,14 +312,17 @@ def build_minhash_index(
                 .write.mode("overwrite")
                 .parquet(f"{tmp}/hot_shingles")
             )
-            hot = spark.read.parquet(f"{tmp}/hot_shingles")
+            # read back with the written schema: no inference job
+            hot = spark.read.schema(pairs.select("shingle").schema).parquet(
+                f"{tmp}/hot_shingles"
+            )
             pairs = pairs.join(hot, "shingle", "left_anti")  # AQE-sized, as above
 
-        minhash_signatures(
-            pairs, num_perm=num_perm, seed=seed, base_hash=base_hash
-        ).write.mode("overwrite").parquet(f"{tmp}/sigs")
+        sig = minhash_signatures(pairs, num_perm=num_perm, seed=seed, base_hash=base_hash)
+        sig.write.mode("overwrite").parquet(f"{tmp}/sigs")
 
-    stored_sig = spark.read.parquet(f"{tmp}/sigs")
+    # read back with the written schema: no inference job
+    stored_sig = spark.read.schema(sig.schema).parquet(f"{tmp}/sigs")
     (
         banded_signature_rows(stored_sig, num_perm, band_rows)
         .write.mode("overwrite")
@@ -325,8 +352,7 @@ def build_minhash_index(
     # not outlive the generation it was issued against).
     spark.createDataFrame(
         [(num_perm, band_rows, seed, base_hash, n, unit, max_shingle_freq)],
-        "num_perm int, band_rows int, seed int, base_hash string, "
-        "n int, unit string, max_shingle_freq int",
+        _META_SCHEMA,
     ).write.mode("overwrite").parquet(f"{tmp}/meta")
     _swap_index_dir(spark, tmp, path)
 
@@ -401,9 +427,11 @@ def minhash_index_dedup(
     # else: caller pre-derived the governed (doc, shingle) relation in
     # THIS index's signature space (minhash_index_screen shares one
     # relation across its legs — r12 review: the screen shingled the
-    # batch twice). It feeds the batch band rows AND (per rescore
-    # path) sigs/sets — one lazy materialization either way.
-    batch_pairs = _pin(batch_pairs)
+    # batch twice). The estimate path reads it once, through the pinned
+    # signatures; the exact path reads it again for the candidate sets,
+    # so only that path pins it.
+    if rescore == "exact":
+        batch_pairs = _pin(batch_pairs)
     batch_sig = _pin(
         minhash_signatures(
             batch_pairs, num_perm=meta.num_perm, seed=meta.seed, base_hash=meta.base_hash
@@ -411,15 +439,16 @@ def minhash_index_dedup(
     )
     batch_bands = banded_signature_rows(batch_sig, meta.num_perm, meta.band_rows)
 
-    stored_bands = spark.read.parquet(f"{path}/bands")
+    # sigs is read with inference (its doc column has the corpus id's
+    # type); bands shares that schema, so its read needs no job
+    stored_sig = spark.read.parquet(f"{path}/sigs")
+    stored_bands = _read_bands(spark, path, stored_sig, meta)
     if bands_to_probe is not None:
         stored_bands = stored_bands.filter(F.col("band_id") < bands_to_probe)
         batch_bands = batch_bands.filter(F.col("band_id") < bands_to_probe)
 
     join_keys = ["band_id"] + [f"v{r}" for r in range(meta.band_rows)]
-    probe = batch_bands.withColumnRenamed("doc", "new_id")
-    if broadcast_batch:
-        probe = F.broadcast(probe)
+    probe = _maybe_bcast(batch_bands.withColumnRenamed("doc", "new_id"), broadcast_batch)
     cand = (
         stored_bands.withColumnRenamed("doc", "corpus_id")
         .join(probe, join_keys)
@@ -427,7 +456,7 @@ def minhash_index_dedup(
         .distinct()
     )
     if exclude_id_eq:
-        cand = cand.filter(F.col("new_id") != F.col("corpus_id"))
+        cand = cand.where("new_id != corpus_id")
     tomb = _tombstones(spark, path)
     if tomb is not None:
         cand = cand.join(
@@ -440,33 +469,27 @@ def minhash_index_dedup(
     cand = _pin(cand)
 
     if rescore == "estimate":
-        stored_sig = spark.read.parquet(f"{path}/sigs")
-        corpus_side = stored_sig.join(
-            F.broadcast(cand.select(F.col("corpus_id").alias("doc")).distinct()),
-            "doc",
-            "left_semi",
-        ).select(
-            F.col("doc").alias("corpus_id"),
-            *[F.col(f"h{i}").alias(f"_c{i}") for i in range(meta.num_perm)],
-        )
-        new_side = batch_sig.select(
-            F.col("doc").alias("new_id"),
-            *[F.col(f"h{i}").alias(f"_n{i}") for i in range(meta.num_perm)],
-        )
-        n_agree = sum(
-            F.when(F.col(f"_c{i}") == F.col(f"_n{i}"), 1).otherwise(0)
-            for i in range(meta.num_perm)
-        )
+        # Each side's signature as ONE array column and n_agree as one
+        # SQL sum: spelled per column through the Column API, the
+        # rescore took several Py4J round trips per column node, ~3.5K
+        # per call at num_perm=32. The candidate pairs carry the batch
+        # signature (cand-sized: tiny by the LSH property) and are
+        # broadcast into the one scan of the stored signatures.
+        p = meta.num_perm
+        sig_arr = "array(" + ", ".join(f"h{i}" for i in range(p)) + ")"
+        new_side = batch_sig.selectExpr("doc AS new_id", f"{sig_arr} AS _n")
+        scored = cand.join(_maybe_bcast(new_side, broadcast_batch), "new_id")
+        n_agree = " + ".join(f"CASE WHEN _c[{i}] = _n[{i}] THEN 1 ELSE 0 END" for i in range(p))
         return (
-            cand.join(_maybe_bcast(new_side, broadcast_batch), "new_id")
-            .join(corpus_side, "corpus_id")
-            .select(
+            stored_sig.selectExpr("doc AS corpus_id", f"{sig_arr} AS _c")
+            .join(F.broadcast(scored), "corpus_id")
+            .selectExpr(
                 "new_id",
                 "corpus_id",
-                n_agree.alias("n_agree"),
-                (n_agree / F.lit(float(meta.num_perm))).alias("jaccard_est"),
+                f"{n_agree} AS n_agree",
+                f"({n_agree}) / {float(p)!r}D AS jaccard_est",
             )
-            .filter(F.col("jaccard_est") >= threshold)
+            .where(f"jaccard_est >= {float(threshold)!r}")
         )
 
     # exact rescore: shingle sets only for candidate docs, both sides
@@ -639,97 +662,94 @@ def upsert_minhash_index(
     meta, hot = index_state if index_state is not None else load_index_state(spark, path)
     in_col = _input_col(meta, text_col, item_col)
 
-    # batch-sized; pinned once — it feeds the presence probe, the
-    # tombstone clears, and the final count (r12 review: three
-    # re-derivations per upsert on the job-latency-bound gate path).
-    # Every pin created here is batch-scoped and released in the
-    # finally below (ADVICE r14: a per-batch gate caller would
-    # otherwise pin ~4 RDDs per micro-batch forever).
-    _pins: list[DataFrame] = []
-    batch_ids = new_docs.select(F.col(id_col).alias("doc")).distinct().localCheckpoint(
-        eager=True
-    )
-    _pins.append(batch_ids)
-    present = spark.read.parquet(f"{path}/sigs").select("doc").join(
-        F.broadcast(batch_ids), "doc", "left_semi"
-    )
-    # bounded by the batch size; pinned because it feeds the anti-join,
-    # the restore rewrite, and both counts
-    present = present.localCheckpoint(eager=True)
-    _pins.append(present)
-    to_insert = new_docs.join(
-        present.withColumnRenamed("doc", id_col), id_col, "left_anti"
-    )
+    # One flag word per id, judged ONCE before any append: bit 1 = in
+    # the batch, 2 = stored in sigs, 4 = tombstoned. The stored leg is
+    # probed with the batch's ids (batch-sized); the tombstone leg is
+    # bounded by the deletes since the last compaction. Pinned: the
+    # tallies below materialize it, and the appends and the tombstone
+    # rewrite read that snapshot, never the tables they write to. Every
+    # pin is batch-scoped and released at scope exit (ADVICE r14: a
+    # per-batch gate caller would otherwise pin RDDs per micro-batch
+    # forever).
+    ids = new_docs.selectExpr(f"`{id_col}` AS doc")
+    legs = [
+        ids.selectExpr("doc", "1 AS _b"),
+        spark.read.parquet(f"{path}/sigs")
+        .select("doc")
+        .join(F.broadcast(ids), "doc", "left_semi")
+        .selectExpr("doc", "2 AS _b"),
+    ]
+    tomb = _tombstones(spark, path)
+    if tomb is not None:
+        legs.append(tomb.selectExpr("tomb_id AS doc", "4 AS _b"))
+    flagged = legs[0]
+    for leg in legs[1:]:
+        flagged = flagged.union(leg)
+    with track_pins():
+        flags = _pin(flagged.groupBy("doc").agg(F.expr("bit_or(_b) AS _b")))
+        # coalesce(1): the global aggregate then needs no exchange of
+        # its own, so the tallies are one job
+        n = flags.coalesce(1).selectExpr(
+            "count_if(_b & 1 = 1) AS batch",
+            "count_if(_b & 3 = 3) AS present",
+            # "restored" counts only tombstoned AND stored ids, whose
+            # stored rows come back into view; a tombstoned-but-absent
+            # id is a plain insert, counted once under "inserted"
+            "count_if(_b & 7 = 7) AS restored",
+            "count_if(_b & 5 = 5) AS cleared",
+            "count_if(_b & 5 = 4) AS kept",
+        ).collect()[0]
 
-    try:
-        pairs = _governed_shingles(to_insert, id_col, in_col, meta, hot)
-        sig = _pin(
-            minhash_signatures(
-                pairs, num_perm=meta.num_perm, seed=meta.seed, base_hash=meta.base_hash
+        if n.batch > n.present:
+            to_insert = new_docs
+            if n.present:
+                to_insert = new_docs.join(
+                    F.broadcast(flags.where("_b & 2 = 2").select(F.col("doc").alias(id_col))),
+                    id_col,
+                    "left_anti",
+                )
+            pairs = _governed_shingles(to_insert, id_col, in_col, meta, hot)
+            sig = _pin(
+                minhash_signatures(
+                    pairs, num_perm=meta.num_perm, seed=meta.seed, base_hash=meta.base_hash
+                )
             )
-        )
-        _pins.append(sig)
-        # bands BEFORE sigs: presence (and therefore re-upsert skipping)
-        # is judged from sigs, so a crash between the two appends must
-        # leave the doc ABSENT from sigs — the retry then re-appends
-        # both, and a duplicated band row is harmless (the query's
-        # candidate set is distinct()). The reverse order would strand
-        # docs present in sigs but bandless: invisible to queries, yet
-        # skipped by every future upsert.
-        (
-            banded_signature_rows(sig, meta.num_perm, meta.band_rows)
-            .write.mode("append")
-            .partitionBy("band_id")
-            .parquet(f"{path}/bands")
-        )
-        sig.write.mode("append").parquet(f"{path}/sigs")
+            # bands BEFORE sigs: presence (and therefore re-upsert
+            # skipping) is judged from sigs, so a crash between the two
+            # appends must leave the doc ABSENT from sigs — the retry
+            # then re-appends both, and a duplicated band row is
+            # harmless (the query's candidate set is distinct()). The
+            # reverse order would strand docs present in sigs but
+            # bandless: invisible to queries, yet skipped by every
+            # future upsert.
+            (
+                banded_signature_rows(sig, meta.num_perm, meta.band_rows)
+                .write.mode("append")
+                .partitionBy("band_id")
+                .parquet(f"{path}/bands")
+            )
+            sig.write.mode("append").parquet(f"{path}/sigs")
 
-        n_restored = 0
-        tomb = _tombstones(spark, path)
-        if tomb is not None:
+        if n.cleared:
             # EVERY upserted id's tombstone must clear — including a
-            # tombstoned-but-absent id we just INSERTED (e.g. deleted,
+            # tombstoned-but-absent id just INSERTED (e.g. deleted,
             # compacted away, then re-admitted): leaving its tombstone
             # would shield the freshly appended rows from every query
-            # (r12 review). "restored" counts only the tombstoned ∧
-            # physically-present ids, whose STORED rows come back into
-            # view — a tombstoned-absent id is a plain insert, counted
-            # once under "inserted".
-            batch_tombs = tomb.join(
-                F.broadcast(batch_ids.withColumnRenamed("doc", "tomb_id")),
-                "tomb_id",
-                "left_semi",
-            ).localCheckpoint(eager=True)
-            _pins.append(batch_tombs)
-            n_restored = batch_tombs.join(
-                present.withColumnRenamed("doc", "tomb_id"), "tomb_id", "left_semi"
-            ).count()
-            if batch_tombs.count():
-                kept = tomb.join(batch_tombs, "tomb_id", "left_anti").localCheckpoint(
-                    eager=True
-                )
-                _pins.append(kept)
-                if kept.count() > 0:
-                    # NOT a plain overwrite (ADVICE r13): Spark overwrite
-                    # deletes the target before committing, so a crash
-                    # mid-write could lose tombstones for UNRELATED docs,
-                    # silently resurrecting deleted corpus docs. Write to
-                    # a sibling temp table and rename-swap, the same
-                    # discipline compaction uses.
-                    tmp = f"{path}/tombstones__restore"
-                    _hadoop_delete(spark, tmp)
-                    kept.write.parquet(tmp)
-                    _swap_in(spark, tmp, f"{path}/tombstones")
-                else:
-                    _drop_tombstones(spark, path)
-        n_present = present.count()
-        return {
-            "inserted": batch_ids.count() - n_present,
-            "restored": n_restored,
-        }
-    finally:
-        for p in _pins:
-            _release_pin(p)
+            # (r12 review).
+            if n.kept:
+                # NOT a plain overwrite (ADVICE r13): Spark overwrite
+                # deletes the target before committing, so a crash
+                # mid-write could lose tombstones for UNRELATED docs,
+                # silently resurrecting deleted corpus docs. Write to a
+                # sibling temp table and rename-swap, the same
+                # discipline compaction uses.
+                tmp = f"{path}/tombstones__restore"
+                _hadoop_delete(spark, tmp)
+                flags.where("_b & 5 = 4").selectExpr("doc AS tomb_id").write.parquet(tmp)
+                _swap_in(spark, tmp, f"{path}/tombstones")
+            else:
+                _drop_tombstones(spark, path)
+    return {"inserted": n.batch - n.present, "restored": n.restored}
 
 
 def delete_from_minhash_index(
@@ -896,13 +916,18 @@ def compact_minhash_index(path: str, spark: SparkSession | None = None) -> int:
         return 0
     tomb_docs = tomb.withColumnRenamed("tomb_id", "doc")
     sigs = spark.read.parquet(f"{path}/sigs")
-    removed = sigs.join(tomb_docs, "doc", "left_semi").count()
+    # removed and total rows in one aggregate (an IN-subquery plans as
+    # a broadcast existence join, so a doc tombstoned twice counts once)
+    removed, total = (
+        sigs.select(F.col("doc").isin(F.broadcast(tomb.select("tomb_id"))).alias("_t"))
+        .selectExpr("count_if(_t)", "count(1)")
+        .collect()[0]
+    )
     if removed:
-        emptied = removed == sigs.count()
-        for table, part_col in (("bands", "band_id"), ("sigs", None)):
-            kept = spark.read.parquet(f"{path}/{table}").join(
-                tomb_docs, "doc", "left_anti"
-            )
+        emptied = removed == total
+        bands = spark.read.parquet(f"{path}/bands")
+        for table, stored, part_col in (("bands", bands, "band_id"), ("sigs", sigs, None)):
+            kept = stored.join(tomb_docs, "doc", "left_anti")
             tmp = f"{path}/{table}__compact"
             if emptied and part_col:
                 # a partitioned write of zero rows leaves no
@@ -935,14 +960,14 @@ def minhash_index_stats(spark: SparkSession, path: str) -> DataFrame:
     review)."""
     _recover_build(spark, path)
     _recover_compaction(spark, path)
-    meta = _read_meta(spark, path)
     bands = spark.read.parquet(f"{path}/bands")
+    # the bucket value columns v0..v{band_rows-1}, from the table itself
+    v_cols = [c for c in bands.columns if c not in ("doc", "band_id")]
     tomb = _tombstones(spark, path)
     if tomb is not None:
         bands = bands.join(
             F.broadcast(tomb.withColumnRenamed("tomb_id", "doc")), "doc", "left_anti"
         )
-    v_cols = [f"v{r}" for r in range(meta.band_rows)]
     buckets = (
         bands.select("doc", "band_id", *v_cols)
         .distinct()

@@ -180,21 +180,14 @@ def _hash_seeded_centroids(
     those operators promise can never drift between copies (r9
     review). Bounded: n_cells rows → the single-partition window is
     safe."""
-    from pyspark.sql import Window
-
     from ..functions.textops import shared_token_hash
 
-    hash_order = [
-        shared_token_hash(F.col(id_col).cast("string")).asc(),
-        F.col(id_col).asc(),
-    ]
-    cell_w = Window.orderBy(*hash_order)
+    order = [shared_token_hash(F.col(id_col).cast("string")).alias("_o"), id_col]
     return (
-        corpus.select(id_col, vec_col)
-        .orderBy(*hash_order)
+        corpus.select(*order, vec_col)
+        .orderBy("_o", id_col)
         .limit(n_cells)
-        .withColumn("cell", F.row_number().over(cell_w) - 1)
-        .select("cell", F.col(vec_col).alias("_cv"))
+        .selectExpr(f"row_number() OVER (ORDER BY _o, `{id_col}`) - 1 AS cell", f"`{vec_col}` AS _cv")
     )
 
 
@@ -1013,26 +1006,26 @@ def pq_fit(
     warm at sf0.1 for m=8, PERF.md). Seeds are the k smallest
     md5(id) vectors — shared across subspaces, as the per-slice fits
     would also pick them (md5(id) is slice-independent)."""
-    from pyspark.sql import Window
-
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     sub_d = dim // m
+    # every projection and aggregate below is SQL text: one Py4J call
+    # per plan step instead of one per column (k sums, k distances)
     ve = df.select(
         F.col(id_col).alias("vid"),
         F.posexplode(_checked_vec(vec_col, dim, "pq_fit input")).alias("gd", "xr"),
-    ).select(
+    ).selectExpr(
         "vid",
-        (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-        (F.col("gd") % F.lit(sub_d)).alias("d"),
-        F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("x"),
+        f"CAST(gd / {sub_d} AS INT) AS subspace",
+        f"gd % {sub_d} AS d",
+        f"CAST(floor(CAST(xr AS DOUBLE) * {scale}) AS BIGINT) AS x",
     )
-    seed_order = [F.md5(F.col("vid").cast("string")).asc(), F.col("vid").asc()]
+    seed_key = "md5(CAST(vid AS STRING))"
     seeds = (
         df.select(F.col(id_col).alias("vid"))
-        .orderBy(*seed_order)
+        .orderBy(F.expr(seed_key), "vid")
         .limit(k)
-        .withColumn("cluster", F.row_number().over(Window.orderBy(*seed_order)) - 1)
+        .selectExpr("vid", f"row_number() OVER (ORDER BY {seed_key}, vid) - 1 AS cluster")
     )
 
     def assign(cent: DataFrame) -> DataFrame:
@@ -1052,10 +1045,7 @@ def pq_fit(
         # min(struct(dist, cluster))). Bit-identical output — pinned
         # by the PQ/IVFADC oracle queries and unit suites.
         cent_arr = cent.groupBy("subspace", "d").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("cluster", "c"))),
-                lambda s: s["c"],
-            ).alias("cs")
+            F.expr("transform(array_sort(collect_list(struct(cluster, c))), s -> s.c) AS cs")
         )
         # try_element_at, not cs[i] (ADVICE r15, medium): when the
         # corpus holds fewer than k vectors the seeds yield <k
@@ -1074,40 +1064,34 @@ def pq_fit(
                 for i in range(k)
             ],
         )
-        sums = j.groupBy("vid", "subspace").agg(
-            *[F.expr(f"sum(_d{i}) AS _d{i}") for i in range(k)]
-        )
-        arr = F.array(*[F.col(f"_d{i}") for i in range(k)])
-        return sums.select(
-            "vid",
-            "subspace",
-            (F.array_position(arr, F.array_min(arr)) - 1).cast("int").alias("cluster"),
+        sums = ", ".join(f"sum(_d{i})" for i in range(k))
+        return (
+            j.groupBy("vid", "subspace")
+            .agg(F.expr(f"array({sums}) AS _a"))
+            .selectExpr(
+                "vid", "subspace", "CAST(array_position(_a, array_min(_a)) - 1 AS INT) AS cluster"
+            )
         )
 
-    cent = ve.join(seeds, "vid").select("subspace", "cluster", "d", F.col("x").alias("c"))
+    cent = ve.join(seeds, "vid").selectExpr("subspace", "cluster", "d", "x AS c")
     for _ in range(iters):
         asg = assign(cent)
         new = (
             ve.join(asg, ["vid", "subspace"])
             .groupBy("subspace", "cluster", "d")
-            .agg(F.floor(F.sum("x") / F.count(F.lit(1))).cast("long").alias("c_new"))
+            .agg(F.expr("CAST(floor(sum(x) / count(1)) AS BIGINT) AS c_new"))
         )
         cent = (
             cent.withColumnRenamed("c", "c_prev")
             .join(new, ["subspace", "cluster", "d"], "left")
-            .select("subspace", "cluster", "d", F.coalesce("c_new", "c_prev").alias("c"))
+            .selectExpr("subspace", "cluster", "d", "coalesce(c_new, c_prev) AS c")
         )
     cent = cent.localCheckpoint(eager=False)
     codes = (
         assign(cent)
         .groupBy("vid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("subspace", "cluster"))),
-                lambda s: s["cluster"],
-            ).alias("codes")
-        )
-        .select(F.col("vid").alias(id_col), "codes")
+        .agg(F.expr("transform(array_sort(collect_list(struct(subspace, cluster))), s -> s.cluster) AS codes"))
+        .withColumnRenamed("vid", id_col)
     )
     return codes, cent
 
@@ -1368,6 +1352,14 @@ def ivfadc_knn(
     )
 
 
+# the fixed schemas of a stored IVFADC index's model tables: reading
+# them with these skips a schema-inference job per table
+_IVFADC_META_SCHEMA = (
+    "dim int, m int, pq_k int, iters int, scale int, n_cells int, encode_residuals boolean"
+)
+_CODEBOOK_SCHEMA = "subspace int, cluster int, d int, c bigint"
+
+
 def build_ivfadc_index(
     corpus: DataFrame,
     path: str,
@@ -1398,7 +1390,18 @@ def build_ivfadc_index(
     stored index searched with the same knobs reproduces the
     in-memory operator bit for bit (equivalence-tested).
     """
-    centroids = _hash_seeded_centroids(corpus, n_cells, id_col, vec_col)
+    spark = corpus.sparkSession
+    # the seed pick runs once: written first, then every consumer reads
+    # the stored copy (with the written schema, so no inference job)
+    seeded = _hash_seeded_centroids(corpus, n_cells, id_col, vec_col).withColumnRenamed(
+        "_cv", "center"
+    )
+    seeded.write.mode("overwrite").parquet(f"{path}/centroids")
+    centroids = (
+        spark.read.schema(seeded.schema)
+        .parquet(f"{path}/centroids")
+        .withColumnRenamed("center", "_cv")
+    )
     assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
 
     if encode_residuals:
@@ -1426,20 +1429,15 @@ def build_ivfadc_index(
         .partitionBy("cell")
         .parquet(f"{path}/codes")
     )
-    centroids.select("cell", F.col("_cv").alias("center")).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/centroids")
     book.write.mode("overwrite").parquet(f"{path}/codebook")
-    corpus.sparkSession.createDataFrame(
-        [(dim, m, pq_k, iters, scale, n_cells, encode_residuals)],
-        "dim int, m int, pq_k int, iters int, scale int, n_cells int, "
-        "encode_residuals boolean",
+    spark.createDataFrame(
+        [(dim, m, pq_k, iters, scale, n_cells, encode_residuals)], _IVFADC_META_SCHEMA
     ).write.mode("overwrite").parquet(f"{path}/meta")
     # A rebuild is a NEW index generation: tombstones from the
     # previous generation must not outlive it, or ids deleted before
     # the rebuild stay invisible even though the fresh corpus
     # contains them (r9 review).
-    _hadoop_delete(corpus.sparkSession, f"{path}/tombstones")
+    _hadoop_delete(spark, f"{path}/tombstones")
 
 
 def ivfadc_index_search(
@@ -1462,25 +1460,30 @@ def ivfadc_index_search(
     index's meta table, so a knob mismatch with build time is
     impossible by construction.
 
-    The ``wanted``-cells collect is bounded by n_probe_cells ×
-    |probes| ≤ n_cells distinct values — driver-safe at any scale.
+    The routed (probe, cell) pairs are broadcast into the codes join,
+    so dynamic partition pruning restricts the codes scan to the
+    probed cells inside the one search plan — no driver-side pass over
+    the routing first.
     Output: probe_id, vec_id, adc_dist (long), rank.
     """
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = spark.read.schema(_IVFADC_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
     dim, m, scale = meta.dim, meta.m, meta.scale
     sub_d = dim // m
-    centroids = spark.read.parquet(f"{path}/centroids").select(
-        "cell", F.col("center").alias("_cv")
-    )
-    book = spark.read.parquet(f"{path}/codebook")
+    centroids = spark.read.parquet(f"{path}/centroids").withColumnRenamed("center", "_cv")
+    book = spark.read.schema(_CODEBOOK_SCHEMA).parquet(f"{path}/codebook")
 
-    probe_cells = _nearest_cells(
-        probes, centroids, probe_id_col, probe_vec_col, n_probe_cells
-    )
-    # driver-side collect bounded by O(n_cells) — distinct cell ids,
-    # never vectors/codes; n_cells is a build knob (~√N), not data-sized
-    wanted = [r.cell for r in probe_cells.select("cell").distinct().collect()]
-    codes = spark.read.parquet(f"{path}/codes").filter(F.col("cell").isin(wanted))
+    # Pinned: the routing runs once, and the codes join below reuses its
+    # broadcast for dynamic partition pruning of the cell partitions.
+    # Spark prunes only when the broadcast side holds a filter it cannot
+    # prove redundant and that plans the same in the pruning subquery as
+    # in the broadcast. The window's top-n filter fails both (the pin
+    # carries it as a known constraint; unpinned, the optimizer rewrites
+    # it into a group limit that only the broadcast gets), so the filter
+    # is the index's cell range.
+    probe_cells = _pin(
+        _nearest_cells(probes, centroids, probe_id_col, probe_vec_col, n_probe_cells)
+    ).where(f"cell < {meta.n_cells}")
+    codes = spark.read.parquet(f"{path}/codes")
     # logically-deleted ids (delete_from_ivfadc_index) stop ranking
     # immediately; physical removal is compact_ivfadc_index's job.
     # The tombstone table is bounded by deletes since last compaction,
@@ -1506,55 +1509,39 @@ def ivfadc_index_search(
                 ).alias("_pr"),
             )
         )
-        pe = pr.select(
-            probe_id_col, "cell", F.posexplode("_pr").alias("gd", "xr")
-        ).select(
-            probe_id_col,
-            "cell",
-            (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-            (F.col("gd") % F.lit(sub_d)).alias("d"),
-            F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("qx"),
-        )
-        dtab = (
-            pe.join(F.broadcast(book), ["subspace", "d"])
-            .groupBy(probe_id_col, "cell", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c"))).alias("dist")
-            )
-        )
-        join_keys = [probe_id_col, "cell", "subspace", "cluster"]
+        exploded = pr.select(probe_id_col, "cell", F.posexplode("_pr").alias("gd", "xr"))
+        keys = [probe_id_col, "cell"]
     else:
-        pe = probes.select(
+        exploded = probes.select(
             F.col(probe_id_col),
             F.posexplode(_checked_vec(probe_vec_col, dim, "ivfadc probe")).alias("gd", "xr"),
-        ).select(
-            probe_id_col,
-            (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-            (F.col("gd") % F.lit(sub_d)).alias("d"),
-            F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("qx"),
         )
-        dtab = (
-            pe.join(F.broadcast(book), ["subspace", "d"])
-            .groupBy(probe_id_col, "subspace", "cluster")
-            .agg(
-                F.sum((F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c"))).alias("dist")
-            )
-        )
-        join_keys = [probe_id_col, "subspace", "cluster"]
+        keys = [probe_id_col]
+    # the quantization and the distance table in SQL text, spelled as in
+    # pq_fit: a handful of Py4J calls instead of one per Column node
+    pid, vid = f"`{probe_id_col}`", f"`{id_col}`"
+    pe = exploded.selectExpr(
+        *[f"`{c}`" for c in keys],
+        f"CAST(gd / {sub_d} AS INT) AS subspace",
+        f"gd % {sub_d} AS d",
+        f"CAST(floor(CAST(xr AS DOUBLE) * {scale}) AS BIGINT) AS qx",
+    )
+    dtab = (
+        pe.join(F.broadcast(book), ["subspace", "d"])
+        .groupBy(*keys, "subspace", "cluster")
+        .agg(F.expr("sum((qx - c) * (qx - c)) AS dist"))
+    )
 
-    cand = probe_cells.join(codes, "cell").select(
-        probe_id_col, id_col, "cell", "codes"
-    )
+    # batch-sized build side; the broadcast is what dynamic partition
+    # pruning reuses to prune the codes scan to the probed cells
+    cand = codes.join(F.broadcast(probe_cells), "cell")
     if exclude_id_eq_probe:
-        cand = cand.filter(F.col(probe_id_col) != F.col(id_col))
-    ce = cand.select(
-        probe_id_col, id_col, "cell",
-        F.posexplode("codes").alias("subspace", "cluster"),
-    )
+        cand = cand.where(f"{pid} != {vid}")
+    ce = cand.selectExpr(pid, vid, "cell", "posexplode(codes) AS (subspace, cluster)")
     scores = (
-        ce.join(F.broadcast(dtab), join_keys)
+        ce.join(F.broadcast(dtab), keys + ["subspace", "cluster"])
         .groupBy(probe_id_col, id_col)
-        .agg(F.sum("dist").alias("adc_dist"))
+        .agg(F.expr("sum(dist) AS adc_dist"))
     )
     return per_group_topk(
         scores,

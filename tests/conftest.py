@@ -46,6 +46,26 @@ def sf_dir() -> str:
     return TEST_SF_DIR
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs ``fn()`` runs, counted
+    through a job group of their own."""
+    import uuid
+
+    def count(fn) -> int:
+        sc = spark.sparkContext
+        group = f"job-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 class _RegistryFrames(dict):
     """name -> the registry query's DataFrame at sf0.001, built on
     first access and kept for the session."""

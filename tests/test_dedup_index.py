@@ -20,6 +20,13 @@ from big_data_movie_recommendation_and_customer_segmentation_spark.operators imp
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
 THRESH = 0.5
+BATCH_JOBS, COMPACT_JOBS = 20, 10
+# recorded before the probe/upsert/compact plans were rewritten
+PINNED_BATCHES = [
+    ({329, 360, 369, 391}, {"inserted": 96, "restored": 0}),
+    ({404, 411, 425, 428, 436, 450, 459, 467, 487}, {"inserted": 91, "restored": 0}),
+]
+PINNED_FINGERPRINT = "0a4b564504ee6e64"
 
 
 def _split(spark, sf_dir):
@@ -837,3 +844,87 @@ def test_gate_index_build_is_memoized_and_cleanup_registered(spark, sf_dir):
     QI._cleanup_md5_indexes()
     assert not os.path.exists(os.path.dirname(p1))
     assert QI._IDX_BUILT == {}
+
+
+def _ingest_batch(spark, path, batch):
+    """One gate step as a streaming ingest runs it: probe the batch,
+    then admit the docs without a hit. Returns (hit ids, upsert
+    counts)."""
+    state = DI.load_index_state(spark, path)
+    hits = DI.minhash_index_dedup(spark, path, batch, threshold=THRESH, index_state=state)
+    hit = {r.new_id for r in hits.select("new_id").distinct().collect()}
+    keep = batch.filter(~F.col("doc_id").isin(sorted(hit))) if hit else batch
+    return hit, DI.upsert_minhash_index(keep, path, index_state=state)
+
+
+def _docs(spark, sf_dir, lo, hi):
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+
+
+def test_ingest_and_compact_job_budget(spark, sf_dir, tmp_path, count_jobs):
+    """A probe+upsert batch and a compaction each run a fixed number
+    of Spark jobs, whatever the batch size: no per-doc or per-column
+    plans, no eager pin or count that one aggregate already answers."""
+    path = str(tmp_path / "budget")
+    DI.build_minhash_index(_docs(spark, sf_dir, 0, 300), path, max_shingle_freq=20)
+    # both batches hold near-duplicates of the corpus: a batch without
+    # a single candidate lets AQE skip the empty rescore's stages
+    small = count_jobs(lambda: _ingest_batch(spark, path, _docs(spark, sf_dir, 320, 340)))
+    large = count_jobs(lambda: _ingest_batch(spark, path, _docs(spark, sf_dir, 340, 440)))
+    DI.delete_from_minhash_index(
+        spark.createDataFrame([(i,) for i in range(0, 300, 50)], "doc_id long"), path
+    )
+    compact = count_jobs(lambda: DI.compact_minhash_index(path, spark))
+    # the budgets are the counts measured on this fixture
+    assert small == large, (small, large)
+    assert small <= BATCH_JOBS and compact <= COMPACT_JOBS, (small, compact)
+
+
+def test_probe_plan_build_round_trip_budget(spark, built, monkeypatch):
+    """Building (not running) the probe plan, with the index state
+    loaded once beforehand as an ingest loop does, costs a bounded
+    number of Py4J round trips: every per-column projection is SQL
+    text, so a Column-API loop over the num_perm signature columns
+    (several calls per column node) cannot come back unnoticed."""
+    import threading
+
+    import py4j.java_gateway as JG
+
+    path, d, old, new = built
+    state = DI.load_index_state(spark, path)
+    calls = []
+    real = JG.GatewayClient.send_command
+    me = threading.get_ident()
+
+    def counting(self, *a, **k):
+        # py4j's finalizer thread releases garbage (of any earlier
+        # test too) on its own schedule: count this thread's calls
+        if threading.get_ident() == me:
+            calls.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(JG.GatewayClient, "send_command", counting)
+    DI.minhash_index_dedup(spark, path, new, threshold=THRESH, index_state=state)
+    monkeypatch.undo()
+    assert len(calls) <= 400, len(calls)
+
+
+def test_ingest_lifecycle_pins_index_content(spark, sf_dir, tmp_path):
+    """build → 2 × (probe → upsert) → delete → restore one deleted doc
+    → compact on the fixture corpus. The hit ids, the upsert counts,
+    the docs removed and the content fingerprint are literals recorded
+    before the probe/upsert/compact plans were rewritten: a plan
+    rewrite must not move a bit of what the index holds or returns."""
+    path = str(tmp_path / "life")
+    DI.build_minhash_index(_docs(spark, sf_dir, 0, 300), path, max_shingle_freq=20)
+    got = [_ingest_batch(spark, path, _docs(spark, sf_dir, lo, lo + 100)) for lo in (300, 400)]
+    DI.delete_from_minhash_index(
+        spark.createDataFrame([(i,) for i in range(0, 300, 50)], "doc_id long"), path
+    )
+    restore = DI.upsert_minhash_index(_docs(spark, sf_dir, 100, 101), path)
+    removed = DI.compact_minhash_index(path, spark)
+    assert got == PINNED_BATCHES
+    assert restore == {"inserted": 0, "restored": 1}
+    assert removed == 5
+    assert DI.minhash_index_fingerprint(spark, path) == PINNED_FINGERPRINT

@@ -12,6 +12,30 @@ from pyspark.sql import functions as F
 from big_data_movie_recommendation_and_customer_segmentation_spark.operators import vectorops as VO
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
+SEARCH_JOBS = 12
+
+
+def _executed_scans(df, table_dir: str) -> list[dict]:
+    """Metrics of the executed file scans of ``table_dir`` in ``df``'s
+    final (post-AQE) plan, e.g. ``numPartitions`` and ``numFiles``."""
+    found = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name == "FileSourceScanExec" and node.relation().location().rootPaths().apply(0).toString().endswith(table_dir):
+            metrics = node.metrics()
+            found.append({k: metrics.apply(k).value() for k in ("numPartitions", "numFiles")})
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
 
 @pytest.mark.parametrize("residual", [False, True])
 def test_ivfadc_index_prunes_and_matches_inmemory(spark, sf_dir, tmp_path, residual):
@@ -41,6 +65,15 @@ def test_ivfadc_index_prunes_and_matches_inmemory(spark, sf_dir, tmp_path, resid
     got = {
         (r.probe_id, r.vec_id, r.adc_dist, r.rank) for r in out.collect()
     }
+    # real pruning, read from the executed codes scan: one probe routed
+    # to 4 of the 8 cells reads exactly those 4 cell partitions
+    one = VO.ivfadc_index_search(
+        spark, path, probes.filter(F.col("probe_id") == 0), k_neighbors=10,
+        n_probe_cells=4,
+    )
+    one.collect()
+    scans = _executed_scans(one, f"{path}/codes")
+    assert len(scans) == 1 and scans[0]["numPartitions"] == 4, scans
     mem = {
         (r.probe_id, r.vec_id, r.adc_dist, r.rank)
         for r in VO.ivfadc_knn(
@@ -52,6 +85,23 @@ def test_ivfadc_index_prunes_and_matches_inmemory(spark, sf_dir, tmp_path, resid
     # deterministic construction both sides => exact agreement,
     # distances included
     assert got == mem
+
+
+def test_ivfadc_index_search_job_budget(spark, sf_dir, tmp_path, count_jobs):
+    """A stored-index search runs a fixed number of Spark jobs: the
+    meta read needs no inference, and the probe routing runs once
+    (no driver-side collect of the probed cells ahead of the search)."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    path = str(tmp_path / "ivfadc_budget")
+    VO.build_ivfadc_index(e, path, n_cells=8, iters=1)
+    probes = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    jobs = count_jobs(
+        lambda: VO.ivfadc_index_search(spark, path, probes, k_neighbors=10).collect()
+    )
+    # the budget is the count measured on this fixture
+    assert jobs <= SEARCH_JOBS, jobs
 
 
 def test_ivfadc_index_meta_drives_geometry(spark, sf_dir, tmp_path):

@@ -301,22 +301,7 @@ def test_als_fixed_seed_recs_match_golden(spark, ratings):
     assert got == exp
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs run by ``fn()``, counted through a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_movielens_job_budget(spark, ratings):
+def test_movielens_job_budget(spark, ratings, count_jobs):
     """Each S4/S5 call is one plan and one action per result: a fixed
     number of Spark jobs, and the bias sweep costs the same for 2
     biases as for 6 (no per-bias or per-holdout plans)."""
@@ -326,12 +311,12 @@ def test_movielens_job_budget(spark, ratings):
     va = split.filter(F.col("split") == "val")
     te = split.filter(F.col("split") == "test")
     kw = dict(min_ratings=2, n_candidates=50, k=10)
-    pop = _jobs(spark, lambda: ML.popularity_eval(spark, tr, va, te, bias=10.0, **kw))
-    sweep2 = _jobs(spark, lambda: ML.popularity_bias_sweep(spark, tr, va, biases=(1.0, 100.0), **kw))
-    sweep6 = _jobs(spark, lambda: ML.popularity_bias_sweep(
+    pop = count_jobs(lambda: ML.popularity_eval(spark, tr, va, te, bias=10.0, **kw))
+    sweep2 = count_jobs(lambda: ML.popularity_bias_sweep(spark, tr, va, biases=(1.0, 100.0), **kw))
+    sweep6 = count_jobs(lambda: ML.popularity_bias_sweep(
         spark, tr, va, biases=(1.0, 10.0, 100.0, 500.0, 1000.0, 10000.0), **kw))
     cfg = ALSConfig(rank=4, reg_param=0.1, max_iter=3, seed=7)
-    als = _jobs(spark, lambda: ML.als_pipeline(spark, tr, va, te, config=cfg, k=10))
+    als = count_jobs(lambda: ML.als_pipeline(spark, tr, va, te, config=cfg, k=10))
     split.unpersist()
     # the budgets are the counts measured on this fixture; ALS spends
     # 6 jobs inside the pyspark.ml fit, 7 on recommend + rank metrics
