@@ -16,7 +16,8 @@ upsert / tombstone / compact), so decontamination becomes an index
 probe and benchmark membership is itself versioned, auditable state.
 
 Layout under ``{path}/`` — same store-derived-params discipline as
-``dedup_index.build_minhash_index``:
+``dedup_index.build_minhash_index``; builds, rewrites, crash healing
+and tombstones follow the protocol in ``index_store``:
 
 - ``grams/``  (bench_id, gram) — DISTINCT 60-bit md5-prefix hashes
   (``textops.shared_token_hash60``) of every word/char ``n``-gram in
@@ -52,16 +53,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import textops as TX
+from . import index_store as IS
 from .dedup import _shingle_fn
-from .dedup_index import (
-    _drop_tombstones,
-    _recover_build,
-    _rename_or_raise,
-    _swap_in,
-    _swap_index_dir,
-)
 from .relational import _pin, _release_pin
-from .vectorops import _hadoop_delete, _hadoop_fs
 
 # The "benchmark-sized by contract" threshold, ENFORCED (VERDICT r14):
 # gram writes are coalesced to one task only below this row count —
@@ -71,6 +65,11 @@ from .vectorops import _hadoop_delete, _hadoop_fs
 # hundred MB of parquet — far past any real eval suite, far below
 # where one writer task would matter.
 COALESCE_GRAM_LIMIT = 10_000_000
+
+_META_SCHEMA = "n int, unit string"
+# the tables that compaction and the tombstone restore swap in; every
+# lifecycle operation and read path heals them on entry
+_TABLES = ("grams", IS.TOMBSTONES)
 
 
 def _write_grams(grams: DataFrame, dest: str, n_grams: int) -> None:
@@ -89,42 +88,6 @@ def _write_grams(grams: DataFrame, dest: str, n_grams: int) -> None:
         grams.write.mode("overwrite").parquet(dest)
     else:
         grams.coalesce(1).write.mode("overwrite").parquet(dest)
-
-
-def _recover_decontam(spark: SparkSession, path: str) -> None:
-    """Self-heal a crash inside a prior ``_swap_in`` on THIS layout's
-    tables (grams__compact, tombstones__restore) — the
-    ``dedup_index._recover_compaction`` rule applied to the decontam
-    layout: a missing live table is reinstated from whichever
-    complete copy exists (finished rewrite with its _SUCCESS marker
-    wins, else the set-aside ``__old``)."""
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs, _ = _hadoop_fs(spark, path)
-    for table, tmp_suffix in (("grams", "__compact"), ("tombstones", "__restore")):
-        live = f"{path}/{table}"
-        if fs.exists(Path(live)):
-            continue
-        tmp, old = f"{live}{tmp_suffix}", f"{live}__old"
-        if fs.exists(Path(f"{tmp}/_SUCCESS")):
-            _rename_or_raise(spark, tmp, live)
-            _hadoop_delete(spark, old)
-        elif fs.exists(Path(old)):
-            _rename_or_raise(spark, old, live)
-
-
-def _heal(spark: SparkSession, path: str) -> None:
-    """Entry-point self-healing, called by EVERY lifecycle operation
-    and read path (ADVICE r14 — mirror ``dedup_index.load_index_state``):
-    a crash inside a staged build swap (``__build`` complete, live dir
-    gone) or a tombstone-restore swap (live ``tombstones/`` set aside
-    as ``__old``) must be repaired before anything reads meta, grams,
-    or tombstones. Without this, a retry upsert after a mid-restore
-    crash sees ``_tombstones() is None``, skips the restore it came to
-    perform, and a later delete/compact heals the debris — resurrecting
-    a stale tombstone that silently hides a live benchmark's grams
-    from every probe. No-op on a healthy (or not-yet-built) index."""
-    _recover_build(spark, path)
-    _recover_decontam(spark, path)
 
 
 def _bench_grams(
@@ -163,23 +126,9 @@ def _doc_grams(
     )
 
 
-def _read_meta(spark: SparkSession, path: str):
-    """Driver-side ``.collect()`` bounded by construction: ``meta/``
-    holds exactly ONE row at any index size — O(1), not O(index)."""
-    return spark.read.parquet(f"{path}/meta").collect()[0]
-
-
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(f"{path}/tombstones")):
-        return None
-    return spark.read.parquet(f"{path}/tombstones")
-
-
 def _live_grams(spark: SparkSession, path: str) -> DataFrame:
     grams = spark.read.parquet(f"{path}/grams")
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         grams = grams.join(
             F.broadcast(tomb.withColumnRenamed("tomb_bench", "bench_id")),
@@ -203,17 +152,14 @@ def build_decontam_index(
     ``n`` defaults by unit — 13 for ``'word'`` (the GPT-3 standard),
     25 for ``'char'`` (≈ the 13-word window at CJK content density) —
     the same unit-aware defaults as ``ngram_decontaminate``
-    (ADVICE r12). Staged-generation build: everything is written to a
-    sibling ``__build`` directory and swapped in as a unit, so a
-    crash mid-rebuild leaves the live index untouched (the
-    ``dedup_index`` discipline, ADVICE r13); a rebuild drops stale
-    tombstones by construction (they don't exist in the new
-    generation). An EMPTY benchmark relation builds a readable empty
-    index (the bootstrap state of a pipeline that registers eval
-    sets incrementally): the gram write is coalesced to one task so
-    a schema-bearing footer always lands (guarded by
-    ``COALESCE_GRAM_LIMIT`` — the benchmark-sized contract is
-    enforced, not assumed)."""
+    (ADVICE r12). Staged-generation build (``index_store.generation``):
+    a crash mid-rebuild leaves the live index untouched, and a rebuild
+    drops stale tombstones by construction. An EMPTY benchmark
+    relation builds a readable empty index (the bootstrap state of a
+    pipeline that registers eval sets incrementally): the gram write
+    is coalesced to one task so a schema-bearing footer always lands
+    (guarded by ``COALESCE_GRAM_LIMIT`` — the benchmark-sized
+    contract is enforced, not assumed)."""
     if unit not in ("word", "char"):
         raise ValueError(f"unit must be 'word' or 'char', got {unit!r}")
     if n is None:
@@ -221,24 +167,16 @@ def build_decontam_index(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     spark = bench.sparkSession
-    _heal(spark, path)
-    tmp = f"{path}__build"
-    _hadoop_delete(spark, tmp)
-    # eager pin: the gram relation feeds the contract count AND the
-    # write — one evaluation, blocks released in finally
-    grams = _bench_grams(bench, bench_col, text_col, n, unit).localCheckpoint(
-        eager=True
-    )
-    try:
-        _write_grams(grams, f"{tmp}/grams", grams.count())
-    finally:
-        _release_pin(grams)
-    # meta LAST: its _SUCCESS marker is the build-complete flag
-    # _recover_build trusts
-    spark.createDataFrame([(n, unit)], "n int, unit string").write.mode(
-        "overwrite"
-    ).parquet(f"{tmp}/meta")
-    _swap_index_dir(spark, tmp, path)
+    with IS.generation(spark, path, (n, unit), _META_SCHEMA) as tmp:
+        # eager pin: the gram relation feeds the contract count AND the
+        # write — one evaluation, blocks released in finally
+        grams = _bench_grams(bench, bench_col, text_col, n, unit).localCheckpoint(
+            eager=True
+        )
+        try:
+            _write_grams(grams, f"{tmp}/grams", grams.count())
+        finally:
+            _release_pin(grams)
 
 
 def decontam_index_overlaps(
@@ -276,8 +214,8 @@ def decontam_index_overlaps(
     Corpus text never shuffles. ``broadcast_index=False`` drops the
     hint for a pathologically large benchmark suite and lets AQE
     decide."""
-    _heal(spark, path)
-    meta = _read_meta(spark, path)
+    IS.heal(spark, path, _TABLES)
+    meta = IS.read_meta(spark, path, _META_SCHEMA)
     doc_grams = _doc_grams(corpus, id_col, text_col, int(meta.n), meta.unit)
     stored = _live_grams(spark, path)
     stored_j = F.broadcast(stored) if broadcast_index else stored
@@ -356,17 +294,17 @@ def upsert_decontam_index(
     upsert is exactly right for growing an existing benchmark (new
     eval questions) as well as registering a new one. Tombstones for
     every upserted bench_id are cleared (insert-or-restore — the
-    retire→re-adopt cycle), with the same staged tombstone-restore
-    swap as ``upsert_minhash_index`` (a crash mid-rewrite must not
-    lose tombstones for UNRELATED benchmarks). Entry heals pending
+    retire→re-adopt cycle), with the staged tombstone restore of
+    ``index_store`` (a crash mid-rewrite must not lose tombstones for
+    UNRELATED benchmarks). Entry heals pending
     swaps first (ADVICE r14): a retry after a crash mid tombstone-
     restore must see the set-aside tombstones, or it would skip the
     restore, report success, and let a later heal resurrect a stale
     tombstone over a live benchmark. Returns
     ``{"inserted": n_new_grams, "restored": n_restored_benchmarks}``."""
     spark = new_bench.sparkSession
-    _heal(spark, path)
-    meta = _read_meta(spark, path)
+    IS.heal(spark, path, _TABLES)
+    meta = IS.read_meta(spark, path, _META_SCHEMA)
     grams = _bench_grams(new_bench, bench_col, text_col, int(meta.n), meta.unit)
     stored = spark.read.parquet(f"{path}/grams")
     fresh = grams.join(stored, ["bench_id", "gram"], "left_anti")
@@ -378,7 +316,7 @@ def upsert_decontam_index(
         fresh.write.mode("append").parquet(f"{path}/grams")
 
     n_restored = 0
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         batch_benches = grams.select(
             F.col("bench_id").alias("tomb_bench")
@@ -390,13 +328,7 @@ def upsert_decontam_index(
                 eager=True
             )
             try:
-                if kept.count() > 0:
-                    tmp = f"{path}/tombstones__restore"
-                    _hadoop_delete(spark, tmp)
-                    kept.write.parquet(tmp)
-                    _swap_in(spark, tmp, f"{path}/tombstones")
-                else:
-                    _drop_tombstones(spark, path)
+                IS.restore_tombstones(spark, path, kept if kept.count() > 0 else None)
             finally:
                 _release_pin(kept)
     return {"inserted": int(n_new), "restored": int(n_restored)}
@@ -407,17 +339,14 @@ def delete_benchmark_from_index(
 ) -> None:
     """Logically retire benchmarks by appending tombstones — O(batch)
     I/O, applied by every probe immediately, reclaimed by compaction.
-    Entry heals pending swaps first (the ``delete_from_minhash_index``
-    rule): appending to a tombstone table whose live copy is set
+    Entry heals pending swaps first (the ``index_store`` heal rule):
+    appending to a tombstone table whose live copy is set
     aside mid-restore would create a fresh table that permanently
     masks the heal."""
     spark = bench_ids.sparkSession
-    _heal(spark, path)
-    (
-        bench_ids.select(F.col(bench_col).cast("string").alias("tomb_bench"))
-        .distinct()
-        .write.mode("append")
-        .parquet(f"{path}/tombstones")
+    IS.heal(spark, path, _TABLES)
+    IS.append_tombstones(
+        bench_ids.select(F.col(bench_col).cast("string").alias("tomb_bench")), path
     )
 
 
@@ -432,8 +361,8 @@ def compact_decontam_index(path: str, spark: SparkSession | None = None) -> int:
         spark = SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError("compact_decontam_index needs an active SparkSession")
-    _heal(spark, path)
-    tomb = _tombstones(spark, path)
+    IS.heal(spark, path, _TABLES)
+    tomb = IS.tombstones(spark, path)
     if tomb is None:
         return 0
     stored = spark.read.parquet(f"{path}/grams")
@@ -451,10 +380,10 @@ def compact_decontam_index(path: str, spark: SparkSession | None = None) -> int:
         n_before = stored.count()
         n_after = kept.count()
         tmp = f"{path}/grams__compact"
-        _hadoop_delete(spark, tmp)
+        IS.delete(spark, tmp)
         _write_grams(kept, tmp, n_after)
-        _swap_in(spark, tmp, f"{path}/grams")
-        _drop_tombstones(spark, path)
+        IS.swap(spark, tmp, f"{path}/grams")
+        IS.drop_tombstones(spark, path)
     finally:
         _release_pin(kept)
     return int(n_before - n_after)
@@ -472,7 +401,7 @@ def decontam_index_fingerprint(spark: SparkSession, path: str) -> str:
     bit-identical screen. One bounded aggregation over the
     benchmark-sized gram table; the empty index fingerprints to
     '0000000000000000'."""
-    _heal(spark, path)
+    IS.heal(spark, path, _TABLES)
     row = (
         _live_grams(spark, path)
         .select(
@@ -492,9 +421,9 @@ def decontam_index_stats(spark: SparkSession, path: str) -> DataFrame:
     operational view a pipeline dashboards (gram volume per eval set,
     retired sets awaiting compaction). One scan of the
     benchmark-sized gram table."""
-    _heal(spark, path)
+    IS.heal(spark, path, _TABLES)
     grams = spark.read.parquet(f"{path}/grams")
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     out = grams.groupBy("bench_id").agg(F.countDistinct("gram").alias("n_grams"))
     if tomb is None:
         return out.withColumn("tombstoned", F.lit(False))

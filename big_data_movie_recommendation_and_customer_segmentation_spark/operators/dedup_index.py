@@ -12,7 +12,9 @@ batch would re-read 100 TB daily for a question whose answer only
 needs the (tiny) band table.
 
 Layout under ``{path}/`` — same store-derived-params discipline as
-the IVFADC index (``vectorops.build_ivfadc_index``):
+the IVFADC index (``vectorops.build_ivfadc_index``); builds, rewrites,
+crash healing and tombstones follow the protocol in
+``index_store``:
 
 - ``bands/``  (doc, v0..v{r-1}) hive-partitioned by ``band_id`` —
   the LSH candidate structure. Partitioning by band makes a
@@ -51,8 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import _shingle_pairs, banded_signature_rows, minhash_signatures
+from . import index_store as IS
 from .relational import _pin, track_pins
-from .vectorops import _hadoop_delete, _hadoop_fs, pin_empty_partition
 
 
 def _maybe_bcast(df: DataFrame, flag: bool) -> DataFrame:
@@ -69,14 +71,8 @@ _META_SCHEMA = (
     "num_perm int, band_rows int, seed int, base_hash string, "
     "n int, unit string, max_shingle_freq int"
 )
-
-
-def _read_meta(spark: SparkSession, path: str):
-    """Driver-side ``.collect()`` bounded by construction: ``meta/``
-    holds exactly ONE row (the frozen knob tuple ``build`` writes) at
-    any corpus scale — O(1), not O(index). Read with its fixed schema:
-    one job (the collect), no schema-inference job before it."""
-    return spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
+# the tables that compaction and the tombstone restore swap in
+_TABLES = ("bands", "sigs", IS.TOMBSTONES)
 
 
 def _hot_shingles(spark: SparkSession, path: str, meta=None) -> DataFrame | None:
@@ -84,8 +80,7 @@ def _hot_shingles(spark: SparkSession, path: str, meta=None) -> DataFrame | None
     a text index's ``meta``, the read skips schema inference: text
     units shingle to strings. A set-input index stores its raw item
     type, which only the files know."""
-    fs, hpath = _hadoop_fs(spark, f"{path}/hot_shingles")
-    if not fs.exists(hpath):
+    if not IS.exists(spark, f"{path}/hot_shingles"):
         return None
     text = meta is not None and meta.unit != "items"
     reader = spark.read.schema("shingle string") if text else spark.read
@@ -99,13 +94,6 @@ def _read_bands(spark: SparkSession, path: str, sigs: DataFrame, meta) -> DataFr
     doc = sigs.schema["doc"].dataType.simpleString()
     values = ", ".join(f"v{r} bigint" for r in range(meta.band_rows))
     return spark.read.schema(f"doc {doc}, {values}, band_id int").parquet(f"{path}/bands")
-
-
-def _tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    fs, hpath = _hadoop_fs(spark, f"{path}/tombstones")
-    if fs.exists(hpath):
-        return spark.read.parquet(f"{path}/tombstones")
-    return None
 
 
 def _governed_shingles(
@@ -153,13 +141,11 @@ def load_index_state(spark: SparkSession, path: str):
     ``index_state`` instead of paying the meta/hot reads per leg.
 
     Entry also self-heals a crash inside a prior rebuild's
-    whole-index swap (``_recover_build``) or a prior table-level
-    rename-swap (``_recover_compaction`` — compaction's bands/sigs,
-    upsert's tombstone restore) — a handful of existence probes,
-    negligible next to any Spark job."""
-    _recover_build(spark, path)
-    _recover_compaction(spark, path)
-    meta = _read_meta(spark, path)
+    whole-index swap or a prior table-level swap (compaction's
+    bands/sigs, upsert's tombstone restore) — ``index_store.heal``, a
+    handful of existence probes, negligible next to any Spark job."""
+    IS.heal(spark, path, _TABLES)
+    meta = IS.read_meta(spark, path, _META_SCHEMA)
     return meta, _hot_shingles(spark, path, meta)
 
 
@@ -183,7 +169,7 @@ def minhash_index_fingerprint(spark: SparkSession, path: str) -> str:
     from ..functions import textops as TX
 
     sigs = spark.read.parquet(f"{path}/sigs")
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         sigs = sigs.join(
             F.broadcast(tomb.withColumnRenamed("tomb_id", "doc")),
@@ -282,79 +268,61 @@ def build_minhash_index(
             n = 3 if unit == "word" else 5
         pairs = _shingle_pairs(corpus, id_col, text_col, n, unit=unit)
     spark = corpus.sparkSession
-    _recover_build(spark, path)
-    # Stage the whole generation into a sibling directory and swap it
-    # in as a unit (ADVICE r13, medium): writing hot_shingles → sigs →
-    # bands → meta sequentially AT the live path means a crash
-    # mid-rebuild leaves mixed-generation state (new sigs under old
-    # meta/bands) that queries consume silently — exactly the
-    # signature-space mixing the derive-params-from-meta design
-    # exists to prevent. A crash anywhere before the swap leaves the
-    # live index untouched; a crash inside the swap is healed on the
-    # next entry (_recover_build: meta/_SUCCESS, written last, marks
-    # the build complete).
-    tmp = f"{path}__build"
-    _hadoop_delete(spark, tmp)
-    with track_pins():
-        if max_shingle_freq is not None:
-            # r16 (VERDICT r15 ask #6): the hot-shingle write and the
-            # signature write each ran the full shingle explode+
-            # distinct (two separate write jobs over the same
-            # subtree). Pin the relation once before the governor so
-            # the second job reads the materialized copy; released at
-            # scope exit (the build consumes everything eagerly).
-            pairs = _pin(pairs)
-            (
-                pairs.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("_df"))
-                .filter(F.col("_df") > max_shingle_freq)
-                .select("shingle")
-                .write.mode("overwrite")
-                .parquet(f"{tmp}/hot_shingles")
-            )
-            # read back with the written schema: no inference job
-            hot = spark.read.schema(pairs.select("shingle").schema).parquet(
-                f"{tmp}/hot_shingles"
-            )
-            pairs = pairs.join(hot, "shingle", "left_anti")  # AQE-sized, as above
+    # The whole generation is staged and swapped in as a unit
+    # (index_store.generation): writing hot_shingles → sigs → bands →
+    # meta AT the live path would let a crash mid-rebuild leave new
+    # sigs under old meta/bands, which queries consume silently —
+    # exactly the signature-space mixing the derive-params-from-meta
+    # design exists to prevent.
+    meta = (num_perm, band_rows, seed, base_hash, n, unit, max_shingle_freq)
+    with IS.generation(spark, path, meta, _META_SCHEMA) as tmp:
+        with track_pins():
+            if max_shingle_freq is not None:
+                # r16 (VERDICT r15 ask #6): the hot-shingle write and the
+                # signature write each ran the full shingle explode+
+                # distinct (two separate write jobs over the same
+                # subtree). Pin the relation once before the governor so
+                # the second job reads the materialized copy; released at
+                # scope exit (the build consumes everything eagerly).
+                pairs = _pin(pairs)
+                (
+                    pairs.groupBy("shingle")
+                    .agg(F.count(F.lit(1)).alias("_df"))
+                    .filter(F.col("_df") > max_shingle_freq)
+                    .select("shingle")
+                    .write.mode("overwrite")
+                    .parquet(f"{tmp}/hot_shingles")
+                )
+                # read back with the written schema: no inference job
+                hot = spark.read.schema(pairs.select("shingle").schema).parquet(
+                    f"{tmp}/hot_shingles"
+                )
+                pairs = pairs.join(hot, "shingle", "left_anti")  # AQE-sized, as above
 
-        sig = minhash_signatures(pairs, num_perm=num_perm, seed=seed, base_hash=base_hash)
-        sig.write.mode("overwrite").parquet(f"{tmp}/sigs")
+            sig = minhash_signatures(pairs, num_perm=num_perm, seed=seed, base_hash=base_hash)
+            sig.write.mode("overwrite").parquet(f"{tmp}/sigs")
 
-    # read back with the written schema: no inference job
-    stored_sig = spark.read.schema(sig.schema).parquet(f"{tmp}/sigs")
-    (
-        banded_signature_rows(stored_sig, num_perm, band_rows)
-        .write.mode("overwrite")
-        .partitionBy("band_id")
-        .parquet(f"{tmp}/bands")
-    )
-    # An EMPTY corpus (the normal starting state of a streaming
-    # near-dedup gate) writes zero band rows, and a partitioned write
-    # of zero rows leaves no schema-bearing file — the first query
-    # would then wedge on schema inference (the exact failure class
-    # dedup_append_writer's committed-glob probe fixed, r10). Pin one
-    # empty partition so the empty index is readable; the first
-    # upsert appends real partitions beside it.
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    have = fs.globStatus(Path(f"{tmp}/bands/band_id=*/*.parquet"))
-    if have is None or len(have) == 0:
-        pin_empty_partition(
-            banded_signature_rows(stored_sig, num_perm, band_rows),
-            f"{tmp}/bands",
-            "band_id",
+        # read back with the written schema: no inference job
+        stored_sig = spark.read.schema(sig.schema).parquet(f"{tmp}/sigs")
+        (
+            banded_signature_rows(stored_sig, num_perm, band_rows)
+            .write.mode("overwrite")
+            .partitionBy("band_id")
+            .parquet(f"{tmp}/bands")
         )
-
-    # meta LAST: its _SUCCESS marker is the build-complete flag
-    # _recover_build trusts. Stale tombstones are dropped simply by
-    # not existing in the new generation directory (a tombstone must
-    # not outlive the generation it was issued against).
-    spark.createDataFrame(
-        [(num_perm, band_rows, seed, base_hash, n, unit, max_shingle_freq)],
-        _META_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{tmp}/meta")
-    _swap_index_dir(spark, tmp, path)
+        # An EMPTY corpus (the normal starting state of a streaming
+        # near-dedup gate) writes zero band rows, and a partitioned write
+        # of zero rows leaves no schema-bearing file — the first query
+        # would then wedge on schema inference (the exact failure class
+        # dedup_append_writer's committed-glob probe fixed, r10). Pin one
+        # empty partition so the empty index is readable; the first
+        # upsert appends real partitions beside it.
+        if not IS.any_file(spark, f"{tmp}/bands/band_id=*/*.parquet"):
+            IS.pin_empty_partition(
+                banded_signature_rows(stored_sig, num_perm, band_rows),
+                f"{tmp}/bands",
+                "band_id",
+            )
 
 
 def minhash_index_dedup(
@@ -457,7 +425,7 @@ def minhash_index_dedup(
     )
     if exclude_id_eq:
         cand = cand.where("new_id != corpus_id")
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         cand = cand.join(
             F.broadcast(tomb.withColumnRenamed("tomb_id", "corpus_id")),
@@ -679,7 +647,7 @@ def upsert_minhash_index(
         .join(F.broadcast(ids), "doc", "left_semi")
         .selectExpr("doc", "2 AS _b"),
     ]
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         legs.append(tomb.selectExpr("tomb_id AS doc", "4 AS _b"))
     flagged = legs[0]
@@ -736,19 +704,8 @@ def upsert_minhash_index(
             # compacted away, then re-admitted): leaving its tombstone
             # would shield the freshly appended rows from every query
             # (r12 review).
-            if n.kept:
-                # NOT a plain overwrite (ADVICE r13): Spark overwrite
-                # deletes the target before committing, so a crash
-                # mid-write could lose tombstones for UNRELATED docs,
-                # silently resurrecting deleted corpus docs. Write to a
-                # sibling temp table and rename-swap, the same
-                # discipline compaction uses.
-                tmp = f"{path}/tombstones__restore"
-                _hadoop_delete(spark, tmp)
-                flags.where("_b & 5 = 4").selectExpr("doc AS tomb_id").write.parquet(tmp)
-                _swap_in(spark, tmp, f"{path}/tombstones")
-            else:
-                _drop_tombstones(spark, path)
+            kept = flags.where("_b & 5 = 4").selectExpr("doc AS tomb_id")
+            IS.restore_tombstones(spark, path, kept if n.kept else None)
     return {"inserted": n.batch - n.present, "restored": n.restored}
 
 
@@ -761,129 +718,12 @@ def delete_from_minhash_index(
 
     Entry heals pending swaps first (r13 review): appending to a
     tombstone table whose live copy is set aside mid-restore would
-    create a FRESH table that permanently masks the heal —
-    ``_recover_compaction`` would see live-present and never
-    reinstate the ``__restore`` holding every unrelated tombstone."""
+    create a FRESH table that permanently masks the heal — the heal
+    would see live-present and never reinstate the ``__restore``
+    holding every unrelated tombstone."""
     spark = delete_ids.sparkSession
-    _recover_build(spark, path)
-    _recover_compaction(spark, path)
-    (
-        delete_ids.select(F.col(id_col).alias("tomb_id"))
-        .distinct()
-        .write.mode("append")
-        .parquet(f"{path}/tombstones")
-    )
-
-
-def _rename_or_raise(spark, src: str, dst: str) -> None:
-    fs, _ = _hadoop_fs(spark, src)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    # Hadoop rename reports failure via its RETURN VALUE, not an
-    # exception (r12 review: the unchecked call could silently leave
-    # the table missing at the stable path)
-    if not fs.rename(Path(src), Path(dst)):
-        raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def _swap_in(spark, tmp: str, live: str) -> None:
-    """Swap ``tmp`` into place at ``live`` without a window where the
-    stable path is deleted-but-unreplaced: set the live table ASIDE
-    (rename, not delete), move the new one in, then drop the
-    set-aside. A crash at any point leaves either the old or the new
-    complete table recoverable (``_recover_compaction``)."""
-    old = f"{live}__old"
-    _hadoop_delete(spark, old)  # stale set-aside from a crashed attempt
-    _rename_or_raise(spark, live, old)
-    try:
-        _rename_or_raise(spark, tmp, live)
-    except Exception:
-        fs, _ = _hadoop_fs(spark, live)
-        Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-        fs.rename(Path(old), Path(live))  # best-effort restore
-        raise
-    _hadoop_delete(spark, old)
-
-
-def _swap_index_dir(spark, tmp: str, live: str) -> None:
-    """Whole-index ``_swap_in``: a rebuild over an existing index
-    swaps the finished generation directory in as a UNIT, so readers
-    never see new sigs under old meta/bands (ADVICE r13). Tolerates
-    an absent live directory (first-ever build). A crash at any point
-    leaves a complete generation recoverable (``_recover_build``)."""
-    fs, _ = _hadoop_fs(spark, live)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    old = f"{live}__old"
-    _hadoop_delete(spark, old)  # stale set-aside from a crashed attempt
-    if fs.exists(Path(live)):
-        _rename_or_raise(spark, live, old)
-    try:
-        _rename_or_raise(spark, tmp, live)
-    except Exception:
-        if fs.exists(Path(old)):
-            fs.rename(Path(old), Path(live))  # best-effort restore
-        raise
-    _hadoop_delete(spark, old)
-
-
-def _recover_build(spark, path: str) -> None:
-    """Self-heal a crash inside a prior rebuild's whole-index swap
-    (``_swap_index_dir``): if the index directory is missing,
-    reinstate whichever complete generation exists — the finished
-    build (``{path}__build`` with its ``meta/_SUCCESS`` marker,
-    written last, wins: it is the newer generation) else the
-    set-aside ``{path}__old``. No-op (a few existence probes) when
-    the index is healthy."""
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs, _ = _hadoop_fs(spark, path)
-    if fs.exists(Path(path)):
-        return
-    build, old = f"{path}__build", f"{path}__old"
-    if fs.exists(Path(f"{build}/meta/_SUCCESS")):
-        _rename_or_raise(spark, build, path)
-        _hadoop_delete(spark, old)
-    elif fs.exists(Path(old)):
-        _rename_or_raise(spark, old, path)
-
-
-def _recover_compaction(spark, path: str) -> None:
-    """Self-heal a crash inside a prior ``_swap_in``: if a live table
-    is missing, reinstate whichever complete copy exists — the
-    finished rewrite (``__compact``/``__restore`` with its _SUCCESS
-    marker wins: it is the newer state) else the set-aside ``__old``.
-    Covers compaction's bands/sigs rewrites AND upsert's
-    tombstone-restore swap (ADVICE r13); an absent tombstone table
-    with no swap debris is the normal no-tombstones state, untouched."""
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs, _ = _hadoop_fs(spark, path)
-    for table, tmp_suffix in (
-        ("bands", "__compact"),
-        ("sigs", "__compact"),
-        ("tombstones", "__restore"),
-    ):
-        live = f"{path}/{table}"
-        if fs.exists(Path(live)):
-            continue
-        tmp, old = f"{live}{tmp_suffix}", f"{live}__old"
-        if fs.exists(Path(f"{tmp}/_SUCCESS")):
-            _rename_or_raise(spark, tmp, live)
-            # the set-aside is now an obsolete generation — drop it,
-            # or a later swap/heal could rename INTO it (Hadoop local
-            # rename nests src inside an existing dst dir)
-            _hadoop_delete(spark, old)
-        elif fs.exists(Path(old)):
-            _rename_or_raise(spark, old, live)
-
-
-def _drop_tombstones(spark, path: str) -> None:
-    """Remove the tombstone table AND any swap debris from a crashed
-    tombstone-restore (``__restore``/``__old``): a stale complete
-    ``__restore`` left beside a legitimately-absent live table would
-    otherwise be resurrected by ``_recover_compaction`` as if it were
-    the newer state. Debris is deleted BEFORE the live table (r13
-    review): the reverse order, crashed between the two deletes,
-    leaves exactly that live-absent + complete-``__restore`` state."""
-    for suffix in ("__restore", "__old", ""):
-        _hadoop_delete(spark, f"{path}/tombstones{suffix}")
+    IS.heal(spark, path, _TABLES)
+    IS.append_tombstones(delete_ids.select(F.col(id_col).alias("tomb_id")), path)
 
 
 def compact_minhash_index(path: str, spark: SparkSession | None = None) -> int:
@@ -895,7 +735,7 @@ def compact_minhash_index(path: str, spark: SparkSession | None = None) -> int:
     this is a full rewrite of ``sigs/`` and ``bands/`` — run it on a
     tombstone-ratio cadence, not per delete. Each table's rewrite
     streams into a sibling directory and is swapped in by rename
-    (``_swap_in`` — the live table is set aside, never
+    (``index_store.swap`` — the live table is set aside, never
     deleted-before-replaced), so nothing index-sized is pinned in
     executor storage and readers always find a complete table at the
     stable path.
@@ -906,12 +746,11 @@ def compact_minhash_index(path: str, spark: SparkSession | None = None) -> int:
     swaps leaves the probe positive and the retry rewrites both
     (re-rewriting already-clean bands is a no-op); tombstones are
     dropped only after both swaps. A crash INSIDE a swap is healed
-    on entry by ``_recover_compaction``."""
+    on entry by ``index_store.heal``."""
     if spark is None:
         spark = SparkSession.getActiveSession()
-    _recover_build(spark, path)
-    _recover_compaction(spark, path)
-    tomb = _tombstones(spark, path)
+    IS.heal(spark, path, _TABLES)
+    tomb = IS.tombstones(spark, path)
     if tomb is None:
         return 0
     tomb_docs = tomb.withColumnRenamed("tomb_id", "doc")
@@ -932,15 +771,19 @@ def compact_minhash_index(path: str, spark: SparkSession | None = None) -> int:
             if emptied and part_col:
                 # a partitioned write of zero rows leaves no
                 # schema-bearing file; pin one empty partition so the
-                # table stays readable (same edge as IVFADC compact)
-                pin_empty_partition(kept, tmp, part_col)
+                # table stays readable (same edge as IVFADC compact).
+                # That write replaces one partition only: a crashed
+                # attempt's staged partitions must go first, or the
+                # swap would bring their rows back
+                IS.delete(spark, tmp)
+                IS.pin_empty_partition(kept, tmp, part_col)
             else:
                 writer = kept.write.mode("overwrite")
                 if part_col:
                     writer = writer.partitionBy(part_col)
                 writer.parquet(tmp)
-            _swap_in(spark, tmp, f"{path}/{table}")
-    _drop_tombstones(spark, path)
+            IS.swap(spark, tmp, f"{path}/{table}")
+    IS.drop_tombstones(spark, path)
     return removed
 
 
@@ -958,12 +801,11 @@ def minhash_index_stats(spark: SparkSession, path: str) -> DataFrame:
     leaves duplicated band rows (its crash contract), which must not
     inflate the dashboard into spurious rebuild alarms — r12
     review)."""
-    _recover_build(spark, path)
-    _recover_compaction(spark, path)
+    IS.heal(spark, path, _TABLES)
     bands = spark.read.parquet(f"{path}/bands")
     # the bucket value columns v0..v{band_rows-1}, from the table itself
     v_cols = [c for c in bands.columns if c not in ("doc", "band_id")]
-    tomb = _tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         bands = bands.join(
             F.broadcast(tomb.withColumnRenamed("tomb_id", "doc")), "doc", "left_anti"

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textops as TX
+from . import index_store as IS
 from .dedup import _base_shingle_hash, _shingle_fn
 
 
@@ -657,6 +658,9 @@ def lm_admission_routing(
     )
 
 
+_LM_META_SCHEMA = "num_buckets int, base_hash string, n_tokens long"
+
+
 def save_bigram_lm(
     uni: DataFrame,
     bi: DataFrame,
@@ -670,29 +674,17 @@ def save_bigram_lm(
     ``bi/``, ``meta/``) — meta written LAST records every
     score-affecting knob (num_buckets, base_hash, n_tokens), so
     scoring derives parameters FROM THE MODEL and a caller cannot
-    silently mix bucket spaces (the ``dedup_index`` meta discipline).
+    silently mix bucket spaces (the ``index_store`` protocol).
 
-    Refit-at-the-same-path stages the whole generation into a
-    sibling ``{path}__build`` directory and swaps it in as a unit
-    (``dedup_index._swap_index_dir`` — the same crash-safety class
-    as the band-index rebuild, ADVICE r13: a crash mid-refit must
-    never leave new counts under an old meta). A crash inside the
-    swap self-heals at the next load."""
-    from .dedup_index import _hadoop_delete, _recover_build, _swap_index_dir
-
-    spark = uni.sparkSession
-    _recover_build(spark, path)
-    tmp = f"{path}__build"
-    _hadoop_delete(spark, tmp)
-    uni.write.mode("overwrite").parquet(f"{tmp}/uni")
-    bi.write.mode("overwrite").parquet(f"{tmp}/bi")
-    # meta LAST: its _SUCCESS marker is the build-complete flag
-    # _recover_build trusts (shared layout with the band index)
-    spark.createDataFrame(
-        [(int(num_buckets), base_hash, int(n_tokens))],
-        "num_buckets int, base_hash string, n_tokens long",
-    ).write.mode("overwrite").parquet(f"{tmp}/meta")
-    _swap_index_dir(spark, tmp, path)
+    Refit-at-the-same-path stages the whole generation and swaps it
+    in as a unit (``index_store.generation`` — the same crash-safety
+    class as the band-index rebuild, ADVICE r13: a crash mid-refit
+    must never leave new counts under an old meta). A crash inside
+    the swap self-heals at the next load."""
+    meta = (int(num_buckets), base_hash, int(n_tokens))
+    with IS.generation(uni.sparkSession, path, meta, _LM_META_SCHEMA) as tmp:
+        uni.write.mode("overwrite").parquet(f"{tmp}/uni")
+        bi.write.mode("overwrite").parquet(f"{tmp}/bi")
 
 
 def load_bigram_lm(spark, path: str):
@@ -701,10 +693,8 @@ def load_bigram_lm(spark, path: str):
     many-batch consumer) and the one-row meta collected driver-side
     (O(1) by construction). Entry self-heals a crash inside a prior
     refit's whole-store swap."""
-    from .dedup_index import _recover_build
-
-    _recover_build(spark, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    IS.heal(spark, path)
+    meta = IS.read_meta(spark, path, _LM_META_SCHEMA)
     return (
         spark.read.parquet(f"{path}/uni"),
         spark.read.parquet(f"{path}/bi"),

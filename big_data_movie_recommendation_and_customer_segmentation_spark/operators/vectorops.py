@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from . import index_store as IS
 from .relational import _pin, per_group_topk
 
 
@@ -1358,6 +1359,8 @@ _IVFADC_META_SCHEMA = (
     "dim int, m int, pq_k int, iters int, scale int, n_cells int, encode_residuals boolean"
 )
 _CODEBOOK_SCHEMA = "subspace int, cluster int, d int, c bigint"
+# the one table of the layout rewritten by swap (the tombstone restore)
+_IVFADC_TABLES = (IS.TOMBSTONES,)
 
 
 def build_ivfadc_index(
@@ -1389,55 +1392,57 @@ def build_ivfadc_index(
     cells, joint quantized Lloyd, optional residual encoding), so a
     stored index searched with the same knobs reproduces the
     in-memory operator bit for bit (equivalence-tested).
+
+    A build or rebuild is a new index generation, staged and swapped
+    in as a unit (``index_store.generation``): a crash mid-rebuild
+    never leaves new centroids under old codes, and tombstones of the
+    previous generation are gone with it, so ids deleted before the
+    rebuild rank again when the fresh corpus contains them (r9
+    review). Every entry point heals a crash inside a swap first.
     """
     spark = corpus.sparkSession
-    # the seed pick runs once: written first, then every consumer reads
-    # the stored copy (with the written schema, so no inference job)
-    seeded = _hash_seeded_centroids(corpus, n_cells, id_col, vec_col).withColumnRenamed(
-        "_cv", "center"
-    )
-    seeded.write.mode("overwrite").parquet(f"{path}/centroids")
-    centroids = (
-        spark.read.schema(seeded.schema)
-        .parquet(f"{path}/centroids")
-        .withColumnRenamed("center", "_cv")
-    )
-    assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
-
-    if encode_residuals:
-        fit_input = (
-            corpus.select(id_col, vec_col)
-            .join(assigned, id_col)
-            .join(F.broadcast(centroids), "cell")
-            .select(
-                id_col,
-                F.zip_with(vec_col, "_cv", lambda a, b: a - b).alias(vec_col),
-            )
-            .localCheckpoint(eager=False)
+    meta = (dim, m, pq_k, iters, scale, n_cells, encode_residuals)
+    with IS.generation(spark, path, meta, _IVFADC_META_SCHEMA) as tmp:
+        # the seed pick runs once: written first, then every consumer
+        # reads the stored copy (with the written schema, so no
+        # inference job)
+        seeded = _hash_seeded_centroids(
+            corpus, n_cells, id_col, vec_col
+        ).withColumnRenamed("_cv", "center")
+        seeded.write.mode("overwrite").parquet(f"{tmp}/centroids")
+        centroids = (
+            spark.read.schema(seeded.schema)
+            .parquet(f"{tmp}/centroids")
+            .withColumnRenamed("center", "_cv")
         )
-    else:
-        fit_input = corpus.select(id_col, vec_col)
-    codes, book = pq_fit(
-        fit_input, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
-        iters=iters, scale=scale,
-    )
+        assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
 
-    (
-        codes.join(assigned, id_col)
-        .select(id_col, F.col("codes").cast("array<int>").alias("codes"), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/codes")
-    )
-    book.write.mode("overwrite").parquet(f"{path}/codebook")
-    spark.createDataFrame(
-        [(dim, m, pq_k, iters, scale, n_cells, encode_residuals)], _IVFADC_META_SCHEMA
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    # A rebuild is a NEW index generation: tombstones from the
-    # previous generation must not outlive it, or ids deleted before
-    # the rebuild stay invisible even though the fresh corpus
-    # contains them (r9 review).
-    _hadoop_delete(spark, f"{path}/tombstones")
+        if encode_residuals:
+            fit_input = (
+                corpus.select(id_col, vec_col)
+                .join(assigned, id_col)
+                .join(F.broadcast(centroids), "cell")
+                .select(
+                    id_col,
+                    F.zip_with(vec_col, "_cv", lambda a, b: a - b).alias(vec_col),
+                )
+                .localCheckpoint(eager=False)
+            )
+        else:
+            fit_input = corpus.select(id_col, vec_col)
+        codes, book = pq_fit(
+            fit_input, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
+            iters=iters, scale=scale,
+        )
+
+        (
+            codes.join(assigned, id_col)
+            .select(id_col, F.col("codes").cast("array<int>").alias("codes"), "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(f"{tmp}/codes")
+        )
+        book.write.mode("overwrite").parquet(f"{tmp}/codebook")
 
 
 def ivfadc_index_search(
@@ -1466,7 +1471,8 @@ def ivfadc_index_search(
     the routing first.
     Output: probe_id, vec_id, adc_dist (long), rank.
     """
-    meta = spark.read.schema(_IVFADC_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
+    IS.heal(spark, path, _IVFADC_TABLES)
+    meta = IS.read_meta(spark, path, _IVFADC_META_SCHEMA)
     dim, m, scale = meta.dim, meta.m, meta.scale
     sub_d = dim // m
     centroids = spark.read.parquet(f"{path}/centroids").withColumnRenamed("center", "_cv")
@@ -1488,7 +1494,7 @@ def ivfadc_index_search(
     # immediately; physical removal is compact_ivfadc_index's job.
     # The tombstone table is bounded by deletes since last compaction,
     # so the anti-join broadcasts.
-    tomb = _index_tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         codes = codes.join(
             F.broadcast(tomb.withColumnRenamed("tomb_id", id_col)), id_col, "left_anti"
@@ -1824,7 +1830,8 @@ def upsert_ivfadc_index(
     values.
     """
     spark = new_vectors.sparkSession
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    IS.heal(spark, path, _IVFADC_TABLES)
+    meta = IS.read_meta(spark, path, _IVFADC_META_SCHEMA)
     centroids = spark.read.parquet(f"{path}/centroids").select(
         "cell", F.col("center").alias("_cv")
     )
@@ -1893,51 +1900,14 @@ def upsert_ivfadc_index(
 
     # a re-inserted id must become searchable again: clear any
     # tombstone covering the upserted ids (tombstone table is small —
-    # bounded by deletes since the last compaction)
-    tomb = _index_tombstones(spark, path)
+    # bounded by deletes since the last compaction) by the staged
+    # restore, which keeps the other ids' tombstones through a crash
+    tomb = IS.tombstones(spark, path)
     if tomb is not None:
         kept = tomb.join(
             new_rows.select(F.col(id_col).alias("tomb_id")), "tomb_id", "left_anti"
         ).localCheckpoint(eager=True)
-        if kept.count() > 0:
-            kept.write.mode("overwrite").parquet(f"{path}/tombstones")
-        else:
-            _hadoop_delete(spark, f"{path}/tombstones")
-
-
-def _hadoop_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _hadoop_delete(spark, path: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-
-def pin_empty_partition(df: DataFrame, path: str, part_col: str) -> None:
-    """Write a schema-bearing EMPTY partition ``{path}/{part_col}=0``:
-    a hive-partitioned write of zero rows leaves no parquet file at
-    all, so the next read of ``path`` fails schema inference. Every
-    index layout that can legitimately empty out (IVFADC codes,
-    MinHash bands) pins its schema through this one helper (r12
-    review: three hand-rolled copies drifted)."""
-    df.limit(0).drop(part_col).write.mode("overwrite").parquet(
-        f"{path}/{part_col}=0"
-    )
-
-
-def _index_tombstones(spark, path: str):
-    """The index's tombstone table (one ``tomb_id`` column) or None.
-    Goes through the Hadoop FileSystem API so existence checks work on
-    whatever store the index lives on (local/HDFS/S3A)."""
-    fs, hpath = _hadoop_fs(spark, f"{path}/tombstones")
-    if fs.exists(hpath):
-        return spark.read.parquet(f"{path}/tombstones")
-    return None
+        IS.restore_tombstones(spark, path, kept if kept.count() > 0 else None)
 
 
 def delete_from_ivfadc_index(
@@ -1958,12 +1928,9 @@ def delete_from_ivfadc_index(
     broadcast cost). Deleting an id that is not in the index is a
     harmless no-op tombstone; a later upsert of a tombstoned id
     clears its tombstone (see ``upsert_ivfadc_index``)."""
-    (
-        delete_ids.select(F.col(id_col).alias("tomb_id"))
-        .distinct()
-        .write.mode("append")
-        .parquet(f"{path}/tombstones")
-    )
+    spark = delete_ids.sparkSession
+    IS.heal(spark, path, _IVFADC_TABLES)
+    IS.append_tombstones(delete_ids.select(F.col(id_col).alias("tomb_id")), path)
 
 
 def compaction_keep_plan(codes, tomb, id_col: str, affected: list):
@@ -2008,7 +1975,8 @@ def compact_ivfadc_index(path: str, spark=None, *, id_col: str | None = None) ->
         from pyspark.sql import SparkSession
 
         spark = SparkSession.getActiveSession()
-    tomb = _index_tombstones(spark, path)
+    IS.heal(spark, path, _IVFADC_TABLES)
+    tomb = IS.tombstones(spark, path)
     if tomb is None:
         return 0
     codes = spark.read.parquet(f"{path}/codes")
@@ -2035,11 +2003,11 @@ def compact_ivfadc_index(path: str, spark=None, *, id_col: str | None = None) ->
             .parquet(f"{path}/codes")
         )
         for cell in set(affected) - surviving:
-            _hadoop_delete(spark, f"{path}/codes/cell={cell}")
+            IS.delete(spark, f"{path}/codes/cell={cell}")
         if not surviving and set(affected) == all_cells:
             # fully emptied: keep partition discovery alive
-            pin_empty_partition(keep, f"{path}/codes", "cell")
-    _hadoop_delete(spark, f"{path}/tombstones")
+            IS.pin_empty_partition(keep, f"{path}/codes", "cell")
+    IS.drop_tombstones(spark, path)
     return removed
 
 

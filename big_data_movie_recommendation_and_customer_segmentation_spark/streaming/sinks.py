@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import index_store as IS
+
 EPOCH_COL = "_epoch"
 
 
@@ -145,19 +147,11 @@ def dedup_append_writer(path: str, id_col: str):
         # empty/aborted sink is treated as "nothing committed yet"
         # while real analysis errors from the anti-join (schema drift,
         # renamed id column) still propagate.
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-
-        def _has_parquet(pattern: str) -> bool:
-            matches = fs.globStatus(
-                jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + pattern)
-            )
-            return matches is not None and len(matches) > 0
-
-        committed = fs.exists(hpath) and (
-            _has_parquet(f"/{EPOCH_COL}=*/*.parquet")  # this sink's layout
-            or _has_parquet("/*.parquet")  # foreign/unpartitioned data
+        base = path.rstrip("/")
+        committed = IS.exists(spark, path) and IS.any_file(
+            spark,
+            f"{base}/{EPOCH_COL}=*/*.parquet",  # this sink's layout
+            f"{base}/*.parquet",  # foreign/unpartitioned data
         )
         fresh = batch_df
         if committed:

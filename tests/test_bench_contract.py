@@ -393,3 +393,24 @@ def test_env_reads_only_in_session_settings():
         if env_read.search(p.read_text(encoding="utf-8"))
     )
     assert readers == ["session.py"], readers
+
+
+def test_filesystem_calls_only_in_index_store():
+    """The crash-safe storage protocol (stage, meta last, swap, heal,
+    tombstones) lives behind one module: only ``operators/index_store.py``
+    reaches the Hadoop FileSystem or renames/deletes through it. A
+    layout that hand-rolls its own swap or heal drifts from the
+    protocol, as the IVFADC copy once did."""
+    import pathlib
+    import re
+
+    import big_data_movie_recommendation_and_customer_segmentation_spark as package
+
+    pkg = pathlib.Path(package.__file__).parent
+    fs_call = re.compile(r"org\.apache\.hadoop\.fs|\bfs\.(rename|delete)\(")
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if fs_call.search(p.read_text(encoding="utf-8"))
+    )
+    assert callers == ["operators/index_store.py"], callers

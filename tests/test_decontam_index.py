@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
     decontam_index as DC,
 )
+from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
+    index_store as IS,
+)
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 from big_data_movie_recommendation_and_customer_segmentation_spark.streaming import (
     sinks as SK,
@@ -137,7 +140,7 @@ def test_geometry_derives_from_meta_not_caller(spark, tmp_path):
     bench = spark.createDataFrame([("b1", A)], "bench_id string, text string")
     path = str(tmp_path / "chr")
     DC.build_decontam_index(bench, path, unit="char", n=10)
-    meta = DC._read_meta(spark, path)
+    meta = IS.read_meta(spark, path, DC._META_SCHEMA)
     assert (meta.n, meta.unit) == (10, "char")
     # a doc sharing a 10-char run with A must collide even though its
     # word 13-grams don't exist
@@ -213,7 +216,7 @@ def test_tombstone_delete_restore_and_compact(spark, tmp_path):
     )
     reclaimed = DC.compact_decontam_index(path, spark)
     assert reclaimed > 0
-    assert DC._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     assert {
         r.bench_id for r in spark.read.parquet(f"{path}/grams").select("bench_id").distinct().collect()
     } == {"b2"}
@@ -236,7 +239,7 @@ def test_build_swap_is_crash_safe(spark, tmp_path):
     DC.build_decontam_index(
         spark.createDataFrame([("b1", A), ("b2", B)], bench2), path
     )
-    assert DC._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     probe = spark.createDataFrame([(1, A), (2, B)], DOC)
     assert {
         r.doc for r in DC.decontam_index_overlaps(spark, path, probe).collect()
@@ -386,8 +389,7 @@ def test_index_fingerprint_is_content_pure(spark, tmp_path):
 
 
 def _rename(spark, src, dst):
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    fs = Path(src).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, Path = IS._fs(spark, src)
     assert fs.rename(Path(src), Path(dst))
 
 
@@ -417,45 +419,13 @@ def test_upsert_heals_crashed_tombstone_restore(spark, tmp_path):
     # tombstone is already gone and b2's survives
     r = DC.upsert_decontam_index(spark.createDataFrame([("b1", A)], bench2), path)
     assert r == {"inserted": 0, "restored": 0}
-    tomb = DC._tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     assert tomb is not None
     assert {t.tomb_bench for t in tomb.collect()} == {"b2"}
     probe = spark.createDataFrame([(1, A), (2, B)], DOC)
     assert {
         r.doc for r in DC.decontam_index_overlaps(spark, path, probe).collect()
     } == {1}
-
-
-def test_read_paths_heal_crashed_swaps(spark, tmp_path):
-    """ADVICE r15: every read path heals swap debris on entry — a
-    probe after a crashed gram compaction (live ``grams/`` missing,
-    complete ``__compact`` beside it) and a compact after a crashed
-    whole-index rebuild (index dir missing, complete ``__build``)
-    both self-repair instead of raising path-not-found."""
-    bench2 = "bench_id string, text string"
-    probe = spark.createDataFrame([(1, A), (2, B)], DOC)
-
-    p1 = str(tmp_path / "gramswap")
-    DC.build_decontam_index(spark.createDataFrame([("b1", A)], bench2), p1)
-    _rename(spark, f"{p1}/grams", f"{p1}/grams__compact")
-    assert {
-        r.doc for r in DC.decontam_index_overlaps(spark, p1, probe).collect()
-    } == {1}
-    assert {r.bench_id for r in DC.decontam_index_stats(spark, p1).collect()} == {"b1"}
-
-    p2 = str(tmp_path / "buildswap")
-    DC.build_decontam_index(spark.createDataFrame([("b1", A)], bench2), p2)
-    _rename(spark, p2, f"{p2}__build")
-    assert DC.compact_decontam_index(p2, spark) == 0  # healed, no tombstones
-    assert {
-        r.doc for r in DC.decontam_index_overlaps(spark, p2, probe).collect()
-    } == {1}
-
-    p3 = str(tmp_path / "fpswap")
-    DC.build_decontam_index(spark.createDataFrame([("b1", A)], bench2), p3)
-    fp = DC.decontam_index_fingerprint(spark, p3)
-    _rename(spark, p3, f"{p3}__build")
-    assert DC.decontam_index_fingerprint(spark, p3) == fp
 
 
 def test_gram_write_contract_guard(spark, tmp_path, monkeypatch):

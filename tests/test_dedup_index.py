@@ -17,6 +17,9 @@ from big_data_movie_recommendation_and_customer_segmentation_spark.operators imp
 from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
     dedup_index as DI,
 )
+from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
+    index_store as IS,
+)
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
 THRESH = 0.5
@@ -203,7 +206,7 @@ def test_delete_restore_compact_lifecycle(spark, sf_dir, tmp_path):
     n_before = spark.read.parquet(f"{path}/sigs").count()
     assert DI.compact_minhash_index(path, spark) == 1
     assert spark.read.parquet(f"{path}/sigs").count() == n_before - 1
-    assert DI._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     after_compact = {
         (r.new_id, r.corpus_id)
         for r in DI.minhash_index_dedup(
@@ -359,7 +362,7 @@ def test_aborted_upsert_retry_is_recoverable(spark, tmp_path):
         "doc_id long, text string",
     )
     # simulate the aborted first attempt: band rows landed, sigs did not
-    meta = DI._read_meta(spark, path)
+    meta = IS.read_meta(spark, path, DI._META_SCHEMA)
     pairs = DI._governed_shingles(batch, "doc_id", "text", meta, None)
     sig = DD.minhash_signatures(
         pairs, num_perm=meta.num_perm, seed=meta.seed, base_hash=meta.base_hash
@@ -390,8 +393,8 @@ def test_build_n_defaults_by_unit(spark, tmp_path):
     pw, pc = str(tmp_path / "w"), str(tmp_path / "c")
     DI.build_minhash_index(docs, pw)
     DI.build_minhash_index(docs, pc, unit="char")
-    assert DI._read_meta(spark, pw).n == 3
-    assert DI._read_meta(spark, pc).n == 5
+    assert IS.read_meta(spark, pw, DI._META_SCHEMA).n == 3
+    assert IS.read_meta(spark, pc, DI._META_SCHEMA).n == 5
 
 
 def test_estimate_plan_joins_are_all_broadcast(spark, built, unpinned):
@@ -427,7 +430,7 @@ def test_set_input_index_matches_set_miner_cross_pairs(spark, sf_dir, tmp_path):
         old, path, id_col="o_custkey", item_col="part",
         num_perm=32, band_rows=2, seed=42,
     )
-    assert DI._read_meta(spark, path).unit == "items"
+    assert IS.read_meta(spark, path, DI._META_SCHEMA).unit == "items"
 
     got = {
         (r.new_id, r.corpus_id, r.n_common, round(r.jaccard, 6))
@@ -481,7 +484,7 @@ def test_upsert_of_tombstoned_absent_id_clears_tombstone(spark, tmp_path):
     DI.delete_from_minhash_index(spark.createDataFrame([(1,)], "doc_id long"), path)
     res = DI.upsert_minhash_index(corpus.filter(F.col("doc_id") == 1), path)
     assert res == {"inserted": 1, "restored": 0}
-    assert DI._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     probe = spark.createDataFrame(
         [(9, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
     )
@@ -508,7 +511,7 @@ def test_compact_retry_converges_after_partial_swap(spark, tmp_path):
     clean_bands.write.mode("overwrite").partitionBy("band_id").parquet(
         f"{path}/bands__compact"
     )
-    DI._swap_in(spark, f"{path}/bands__compact", f"{path}/bands")
+    IS.swap(spark, f"{path}/bands__compact", f"{path}/bands")
     assert spark.read.parquet(f"{path}/bands").filter(F.col("doc") == 1).count() == 0
     assert spark.read.parquet(f"{path}/sigs").filter(F.col("doc") == 1).count() == 1
 
@@ -516,7 +519,7 @@ def test_compact_retry_converges_after_partial_swap(spark, tmp_path):
     assert DI.compact_minhash_index(path, spark) == 1
     assert spark.read.parquet(f"{path}/sigs").filter(F.col("doc") == 1).count() == 0
     assert spark.read.parquet(f"{path}/bands").filter(F.col("doc") == 1).count() == 0
-    assert DI._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     # exact rescore must not resurrect the deleted doc
     probe = spark.createDataFrame(
         [(9, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
@@ -527,6 +530,28 @@ def test_compact_retry_converges_after_partial_swap(spark, tmp_path):
     assert got.count() == 0
 
 
+def test_compact_to_empty_drops_a_crashed_attempts_staging(spark, tmp_path):
+    """A compaction that empties the index pins one empty band
+    partition in the staging table. Partitions staged by an earlier
+    attempt that crashed before its swap must not ride along, or the
+    removed docs' band rows come back with their tombstones gone."""
+    corpus = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "totally unrelated words here")],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "mh_stage")
+    DI.build_minhash_index(corpus, path, n=3, num_perm=32, band_rows=2, seed=42)
+    DI.delete_from_minhash_index(spark.createDataFrame([(1,)], "doc_id long"), path)
+    # the first compaction staged its bands (doc 2 kept), then crashed
+    spark.read.parquet(f"{path}/bands").filter("doc != 1").write.partitionBy(
+        "band_id"
+    ).parquet(f"{path}/bands__compact")
+    DI.delete_from_minhash_index(spark.createDataFrame([(2,)], "doc_id long"), path)
+    assert DI.compact_minhash_index(path, spark) == 2
+    assert spark.read.parquet(f"{path}/bands").count() == 0
+    assert DI.minhash_index_stats(spark, path).count() == 0
+
+
 def test_recover_compaction_heals_missing_live_table(spark, tmp_path):
     """A crash INSIDE a swap (live table set aside, replacement not
     yet in place) self-heals on the next compact entry."""
@@ -535,8 +560,7 @@ def test_recover_compaction_heals_missing_live_table(spark, tmp_path):
     )
     path = str(tmp_path / "mh_heal")
     DI.build_minhash_index(corpus, path, n=3, num_perm=32, band_rows=2, seed=42)
-    fs, _ = DI._hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, Path = IS._fs(spark, path)
     # simulate: live sigs renamed aside, crash before the rename-in
     assert fs.rename(Path(f"{path}/sigs"), Path(f"{path}/sigs__old"))
     assert DI.compact_minhash_index(path, spark) == 0  # heals, then no tombstones
@@ -604,73 +628,10 @@ def test_band_rows_must_divide_num_perm(spark, tmp_path):
     with pytest.raises(ValueError, match="multiple of band_rows"):
         DI.build_minhash_index(corpus, path, num_perm=33, band_rows=2)
     # fail-fast: nothing was written (no half-built generation)
-    fs, hpath = DI._hadoop_fs(spark, path)
-    assert not fs.exists(hpath)
+    assert not IS.exists(spark, path)
     sig = spark.createDataFrame([(1, 10, 11, 12)], "doc long, h0 long, h1 long, h2 long")
     with pytest.raises(ValueError, match="multiple of band_rows"):
         DD.banded_signature_rows(sig, 3, 2)
-
-
-def test_rebuild_crash_before_swap_leaves_live_generation_intact(spark, tmp_path):
-    """A rebuild stages everything into {path}__build — a crash at ANY
-    point before the swap leaves the live index fully readable at its
-    old generation, and the next build clears the debris."""
-    gen1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
-    )
-    gen2 = spark.createDataFrame(
-        [(2, "totally unrelated words over here now")], "doc_id long, text string"
-    )
-    path = str(tmp_path / "mh_gen")
-    DI.build_minhash_index(gen1, path, n=3, num_perm=32, band_rows=2, seed=42)
-    # simulate a second build crashing mid-stage: partial __build
-    # (sigs written, no meta yet)
-    spark.read.parquet(f"{path}/sigs").write.parquet(f"{path}__build/sigs")
-    meta, hot = DI.load_index_state(spark, path)
-    assert meta.num_perm == 32 and hot is None  # live generation untouched
-    assert spark.read.parquet(f"{path}/sigs").select("doc").first().doc == 1
-    # the next full rebuild clears the debris and swaps cleanly
-    DI.build_minhash_index(gen2, path, n=3, num_perm=32, band_rows=2, seed=42)
-    fs, _ = DI._hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    assert not fs.exists(Path(f"{path}__build"))
-    assert not fs.exists(Path(f"{path}__old"))
-    assert {r.doc for r in spark.read.parquet(f"{path}/sigs").collect()} == {2}
-
-
-def test_rebuild_crash_inside_swap_heals_on_next_entry(spark, tmp_path):
-    """A crash INSIDE the whole-index swap self-heals at the next
-    load: the finished build (meta/_SUCCESS present) wins as the
-    newer generation; with no finished build, the set-aside old
-    generation is reinstated."""
-    gen1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
-    )
-    gen2 = spark.createDataFrame(
-        [(2, "totally unrelated words over here now")], "doc_id long, text string"
-    )
-    fs, _ = DI._hadoop_fs(spark, str(tmp_path))
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-
-    # case A: live set aside, no finished build -> old gen restored
-    pa = str(tmp_path / "heal_a")
-    DI.build_minhash_index(gen1, pa, n=3, num_perm=32, band_rows=2, seed=42)
-    assert fs.rename(Path(pa), Path(f"{pa}__old"))
-    meta, _ = DI.load_index_state(spark, pa)
-    assert meta.num_perm == 32
-    assert {r.doc for r in spark.read.parquet(f"{pa}/sigs").collect()} == {1}
-
-    # case B: live set aside AND a complete __build exists -> build wins
-    pb = str(tmp_path / "heal_b")
-    DI.build_minhash_index(gen1, pb, n=3, num_perm=32, band_rows=2, seed=42)
-    staged = str(tmp_path / "staged")
-    DI.build_minhash_index(gen2, staged, n=3, num_perm=16, band_rows=2, seed=7)
-    assert fs.rename(Path(pb), Path(f"{pb}__old"))
-    assert fs.rename(Path(staged), Path(f"{pb}__build"))
-    meta, _ = DI.load_index_state(spark, pb)
-    assert meta.num_perm == 16  # the newer generation
-    assert {r.doc for r in spark.read.parquet(f"{pb}/sigs").collect()} == {2}
-    assert not fs.exists(Path(f"{pb}__old"))
 
 
 def test_tombstone_restore_crash_heals_without_losing_unrelated_tombstones(
@@ -692,8 +653,7 @@ def test_tombstone_restore_crash_heals_without_losing_unrelated_tombstones(
     DI.delete_from_minhash_index(
         spark.createDataFrame([(1,), (2,)], "doc_id long"), path
     )
-    fs, _ = DI._hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, Path = IS._fs(spark, path)
 
     # crash after the restore write, live table set aside, rename-in
     # not yet done: the complete __restore (doc 2 kept) must win
@@ -702,15 +662,15 @@ def test_tombstone_restore_crash_heals_without_losing_unrelated_tombstones(
     )
     assert fs.rename(Path(f"{path}/tombstones"), Path(f"{path}/tombstones__old"))
     DI.load_index_state(spark, path)  # heals on entry
-    tomb = DI._tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     assert tomb is not None and {r.tomb_id for r in tomb.collect()} == {2}
 
     # crash BEFORE the restore write finished (no _SUCCESS-complete
     # replacement): the set-aside old table is reinstated
-    DI._hadoop_delete(spark, f"{path}/tombstones__restore")
+    IS.delete(spark, f"{path}/tombstones__restore")
     assert fs.rename(Path(f"{path}/tombstones"), Path(f"{path}/tombstones__old"))
     DI.load_index_state(spark, path)
-    tomb = DI._tombstones(spark, path)
+    tomb = IS.tombstones(spark, path)
     assert tomb is not None and {r.tomb_id for r in tomb.collect()} == {2}
 
 
@@ -733,9 +693,9 @@ def test_full_restore_leaves_no_resurrectable_tombstone_debris(spark, tmp_path):
         corpus.filter(F.col("doc_id") == 1), path, id_col="doc_id", text_col="text"
     )
     assert got == {"inserted": 0, "restored": 1}
-    assert DI._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     DI.load_index_state(spark, path)  # recovery must NOT resurrect debris
-    assert DI._tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
 
 
 def test_broadcast_batch_false_unhints_batch_sides_and_matches(spark, built):
@@ -800,15 +760,14 @@ def test_delete_heals_pending_restore_before_appending(spark, tmp_path):
     DI.delete_from_minhash_index(spark.createDataFrame([(1,)], "doc_id long"), path)
     # crash inside a restore swap: live set aside, complete __restore
     # (still holding doc 1's tombstone) waiting to be renamed in
-    fs, _ = DI._hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, Path = IS._fs(spark, path)
     spark.read.parquet(f"{path}/tombstones").write.parquet(
         f"{path}/tombstones__restore"
     )
     assert fs.rename(Path(f"{path}/tombstones"), Path(f"{path}/tombstones__old"))
     # the next operation is a DELETE of doc 2
     DI.delete_from_minhash_index(spark.createDataFrame([(2,)], "doc_id long"), path)
-    tomb = {r.tomb_id for r in DI._tombstones(spark, path).collect()}
+    tomb = {r.tomb_id for r in IS.tombstones(spark, path).collect()}
     assert tomb == {1, 2}, "healed restore must survive the append"
 
 

@@ -8,6 +8,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
+    index_store as IS,
+)
 from big_data_movie_recommendation_and_customer_segmentation_spark.operators import vectorops as VO
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
@@ -179,7 +182,7 @@ def test_delete_tombstones_then_compact_rewrites_only_affected_cells(
     for vid in after:
         assert after[vid] == before[vid]
     # tombstone table is gone
-    assert VO._index_tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
     # untouched cells kept their files byte-for-byte (same mtimes)
     post = cell_mtimes()
     for d, files in pre.items():
@@ -221,7 +224,45 @@ def test_delete_then_reupsert_makes_id_searchable_again(spark, emb, tmp_path):
             spark, path, probes, k_neighbors=5, n_probe_cells=4).collect()
     }
     assert revived.get(victim) == hit0[0]["adc_dist"]
-    assert VO._index_tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
+
+
+def test_tombstone_restore_crash_keeps_deleted_ids_hidden(spark, emb, tmp_path):
+    """The upsert clears tombstones by a staged restore and a swap,
+    and every entry point heals a crash inside that swap: with the
+    live table set aside as ``__old``, deleted ids stay hidden from
+    the search, whether or not the ``__restore`` copy was complete."""
+    path = str(tmp_path / "idx_tomb_crash")
+    VO.build_ivfadc_index(
+        emb.filter(F.col("vec_id") < 100), path, n_cells=4, dim=64, m=8,
+        pq_k=16, iters=1,
+    )
+    VO.delete_from_ivfadc_index(spark.createDataFrame([(3,), (7,)], "vec_id long"), path)
+    probes = emb.filter(F.col("vec_id").isin(3, 7)).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+
+    def found():
+        return {
+            r["vec_id"] for r in VO.ivfadc_index_search(
+                spark, path, probes, k_neighbors=5, n_probe_cells=4).collect()
+        }
+
+    fs, Path = IS._fs(spark, path)
+    # crash inside the restore of id 3: the complete __restore (id 7
+    # kept) must win over the set-aside table
+    spark.createDataFrame([(7,)], "tomb_id long").write.parquet(
+        f"{path}/tombstones__restore"
+    )
+    assert fs.rename(Path(f"{path}/tombstones"), Path(f"{path}/tombstones__old"))
+    assert 7 not in found() and 3 in found()
+
+    # crash before the restore write finished: the set-aside table
+    # is reinstated
+    IS.delete(spark, f"{path}/tombstones__restore")
+    assert fs.rename(Path(f"{path}/tombstones"), Path(f"{path}/tombstones__old"))
+    assert 7 not in found()
+    assert {r.tomb_id for r in IS.tombstones(spark, path).collect()} == {7}
 
 
 def test_compact_removes_fully_emptied_cell_partition(spark, emb, tmp_path):
@@ -286,7 +327,7 @@ def test_compact_infers_custom_id_col_from_codes_schema(spark, emb, tmp_path):
         for r in spark.read.parquet(f"{path}/codes").collect()
     }
     assert set(after) == set(before) - set(victims)
-    assert VO._index_tombstones(spark, path) is None
+    assert IS.tombstones(spark, path) is None
 
 
 def test_compact_that_empties_every_cell_keeps_index_readable(

@@ -119,7 +119,7 @@ def test_model_refit_crash_safety(spark, tmp_path):
     a crash before the swap leaves the old generation intact (the
     band-index rebuild contract, shared machinery)."""
     from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
-        dedup_index as DI,
+        index_store as IS,
     )
 
     ref1 = spark.createDataFrame([(1, GOOD[0])], DOC)
@@ -137,8 +137,7 @@ def test_model_refit_crash_safety(spark, tmp_path):
     _, _, meta = TC.load_bigram_lm(spark, path)
     assert meta.n_tokens == n2
     # crash INSIDE the swap: store set aside, no finished build
-    fs, _ = DI._hadoop_fs(spark, path)
-    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    fs, Path = IS._fs(spark, path)
     assert fs.rename(Path(path), Path(f"{path}__old"))
     _, _, meta = TC.load_bigram_lm(spark, path)  # heals on entry
     assert meta.n_tokens == n2

@@ -80,6 +80,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
+        index_store as IS,
+    )
+    from big_data_movie_recommendation_and_customer_segmentation_spark.operators import (
         vectorops as VO,
     )
     from big_data_movie_recommendation_and_customer_segmentation_spark.sources import (
@@ -96,7 +99,7 @@ def main() -> None:
             emb.select("vec_id").limit(5), path
         )
         codes = spark.read.parquet(f"{path}/codes")
-        tomb = VO._index_tombstones(spark, path)
+        tomb = IS.tombstones(spark, path)
         doomed = codes.join(
             tomb.withColumnRenamed("tomb_id", "vec_id"), "vec_id", "left_semi"
         )
