@@ -7,14 +7,21 @@ Search over an ``array<float>`` embedding column:
   heap (TakeOrderedAndProject via window). Linear in corpus size —
   the correct baseline, and often the right answer when the probe
   set is small.
-- ``ann_lsh_pairs`` / ``ann_lsh_neighbors`` — BucketedRandomProjection
-  LSH on unit-normalized vectors (on the unit sphere
-  ‖x−y‖² = 2−2cosθ, so a euclidean radius r ↔ cosine ≥ 1−r²/2).
-  Sub-linear candidate generation; the 100 TB path.
-- ``ivf_knn`` — inverted-file ANN: KMeans coarse quantizer →
-  restrict search to the ``n_probe_cells`` nearest centroids per
-  probe. The classic IVF-Flat layout (Johnson et al. 2017), built
-  from KMeans + a cell-keyed equi-join.
+- ``ann_lsh_neighbors`` / ``ann_hyperplane_neighbors`` — LSH
+  candidate generation (BucketedRandomProjection, or deterministic
+  sign-random-projection keys), rescored with exact cosine.
+- ``ivf_knn`` / ``ivf_knn_deterministic`` — inverted-file ANN
+  (IVF-Flat, Johnson et al. 2017): a coarse quantizer (pyspark.ml
+  KMeans, or hash-seeded cells) restricts each probe to its
+  ``n_probe_cells`` nearest cells via a cell-keyed equi-join.
+- ``pq_fit`` / ``pq_knn`` — product quantization and asymmetric
+  -distance (ADC) search (Jégou et al. 2011), exact integer
+  arithmetic end to end.
+- ``ivfadc_knn`` and the stored IVFADC index (``build_ivfadc_index``,
+  ``ivfadc_index_search``, upsert / delete / compact) — IVF cells
+  plus PQ codes, the one stored vector layout, kept by
+  ``index_store``. The in-memory operator and the stored index share
+  one model step and one ADC scorer, so they agree bit for bit.
 - ``kmeans_segments`` — customer/user segmentation (the north star
   names K-means; the reference's segmentation used LSH pairs only).
 """
@@ -248,6 +255,55 @@ def _checked_vec(vec, expected_len: int, ctx: str):
                     F.lit(f" != expected dim {expected_len}"),
                 )
             )
+        )
+    )
+
+
+def _quantized(
+    df: DataFrame, keys: list[str], vec_col: str, dim: int, m: int, scale: int, ctx: str
+) -> DataFrame:
+    """One row per vector component, ``(*keys, subspace, d, x)``: the
+    component's PQ subspace, its 0-based index inside the subspace,
+    and its integer value ``floor(v·scale)``. Every PQ relation (the
+    fit, the encoding against a frozen codebook, the probes' distance
+    tables) is built from this one projection, so they quantize
+    alike. Length-guarded by ``_checked_vec``. SQL text: a handful of
+    Py4J calls instead of one per Column node."""
+    sub_d = dim // m
+    return df.select(
+        *keys, F.posexplode(_checked_vec(vec_col, dim, ctx)).alias("gd", "xr")
+    ).selectExpr(
+        *[f"`{c}`" for c in keys],
+        f"CAST(gd / {sub_d} AS INT) AS subspace",
+        f"gd % {sub_d} AS d",
+        f"CAST(floor(CAST(xr AS DOUBLE) * {scale}) AS BIGINT) AS x",
+    )
+
+
+def _residuals(
+    df: DataFrame,
+    cells: DataFrame,
+    centroids: DataFrame,
+    key_col: str,
+    vec_col: str,
+    dim: int,
+    ctx: str,
+) -> DataFrame:
+    """``(key, cell, vec − centroid(cell))`` for every ``(key, cell)``
+    row of ``cells`` — the IVFADC residual, an exact double
+    subtraction on every engine. The vector is length-checked BEFORE
+    the subtraction: ``zip_with`` pads a short vector with NULLs to
+    the centroid's length, which the check after it cannot see."""
+    return (
+        df.select(key_col, vec_col)
+        .join(cells, key_col)
+        .join(F.broadcast(centroids), "cell")
+        .select(
+            key_col,
+            "cell",
+            F.zip_with(
+                _checked_vec(vec_col, dim, ctx), "_cv", lambda a, b: a - b
+            ).alias(vec_col),
         )
     )
 
@@ -486,8 +542,8 @@ def ivf_knn(
     coarse quantizer doesn't need converged KMeans — ``max_iter=8``
     (vs the default 20) moves centroids <1% of within-cell variance
     and halves training cost; at 100 TB fit it on a sample. The
-    corpus side would additionally be *stored* partitioned by cell id
-    so the equi-join prunes parquet partitions.
+    stored, cell-partitioned form whose scan prunes to the probed
+    cells is ``build_ivfadc_index``.
     Output: probe_id, vec_id, cos_sim, rank (approximate top-k).
     """
     from pyspark.ml.clustering import KMeans
@@ -500,20 +556,10 @@ def ivf_knn(
     assigned = model.transform(c_feats).select(id_col, vec_col, "cell")
 
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    spark = corpus.sparkSession
-    centers_df = spark.createDataFrame(centers, "cell int, center array<double>")
-
-    probe_cells = per_group_topk(
-        probes.crossJoin(F.broadcast(centers_df)).select(
-            probe_id_col,
-            probe_vec_col,
-            "cell",
-            V.cosine(probe_vec_col, "center").alias("_cell_sim"),
-        ),
-        probe_id_col,
-        [F.col("_cell_sim").desc(), F.col("cell").asc()],
-        n_probe_cells,
-    ).select(probe_id_col, probe_vec_col, "cell")
+    centroids = corpus.sparkSession.createDataFrame(centers, "cell int, _cv array<double>")
+    probe_cells = _nearest_cells(
+        probes, centroids, probe_id_col, probe_vec_col, n_probe_cells, keep_vec=True
+    )
 
     scored = (
         assigned.join(probe_cells, "cell")
@@ -574,94 +620,6 @@ def ivf_knn_deterministic(
     )
     if exclude_id_eq_probe:
         scored = scored.filter(F.col(id_col) != F.col(probe_id_col))
-    return per_group_topk(
-        scored,
-        probe_id_col,
-        [F.col("cos_sim").desc(), F.col(id_col).asc()],
-        k,
-        rank_col="rank",
-        keep_rank=True,
-    )
-
-
-def build_ivf_index(
-    corpus: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 8,
-) -> DataFrame:
-    """Materialize an IVF index: assign each vector to its KMeans
-    cell and write the corpus parquet-partitioned BY CELL, plus the
-    centroid table alongside. This is the 100 TB layout: a probe
-    restricted to ``n_probe_cells`` cells prunes the other
-    partitions at the parquet scan (PartitionFilters), so search I/O
-    is ~n_probe/n_cells of the corpus instead of a full scan —
-    the storage-layout half of IVF that the in-memory variant
-    (``ivf_knn``) can't show.
-
-    Returns the centroid DataFrame (cell, center).
-    """
-    from pyspark.ml.clustering import KMeans
-
-    c_feats = _to_ml_vectors(corpus.select(id_col, vec_col), vec_col, "features")
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, featuresCol="features", predictionCol="cell"
-    )
-    model = km.fit(c_feats)
-    assigned = model.transform(c_feats).select(id_col, vec_col, "cell")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/vectors")
-
-    spark = corpus.sparkSession
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    centers_df = spark.createDataFrame(centers, "cell int, center array<double>")
-    centers_df.write.mode("overwrite").parquet(f"{path}/centroids")
-    return centers_df
-
-
-def ivf_index_search(
-    spark,
-    path: str,
-    probes: DataFrame,
-    k: int = 10,
-    n_probe_cells: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "probe_vec",
-) -> DataFrame:
-    """Search a stored IVF index (see ``build_ivf_index``): rank
-    cells per probe against the tiny centroid table, then scan ONLY
-    the selected cell partitions (the ``cell`` equi-join key is a
-    partition column, so the parquet scan prunes — asserted in
-    tests). Output: probe_id, vec_id, cos_sim, rank."""
-    centers_df = spark.read.parquet(f"{path}/centroids")
-    probe_cells = per_group_topk(
-        probes.crossJoin(F.broadcast(centers_df)).select(
-            probe_id_col,
-            probe_vec_col,
-            "cell",
-            V.cosine(probe_vec_col, "center").alias("_cell_sim"),
-        ),
-        probe_id_col,
-        [F.col("_cell_sim").desc(), F.col("cell").asc()],
-        n_probe_cells,
-    ).select(probe_id_col, probe_vec_col, "cell")
-
-    wanted = [r.cell for r in probe_cells.select("cell").distinct().collect()]
-    vectors = spark.read.parquet(f"{path}/vectors").filter(F.col("cell").isin(wanted))
-
-    scored = (
-        vectors.join(F.broadcast(probe_cells), "cell")
-        .select(
-            probe_id_col,
-            id_col,
-            V.cosine(vec_col, probe_vec_col).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-    )
     return per_group_topk(
         scored,
         probe_id_col,
@@ -1009,17 +967,11 @@ def pq_fit(
     would also pick them (md5(id) is slice-independent)."""
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m}")
-    sub_d = dim // m
     # every projection and aggregate below is SQL text: one Py4J call
     # per plan step instead of one per column (k sums, k distances)
-    ve = df.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(_checked_vec(vec_col, dim, "pq_fit input")).alias("gd", "xr"),
-    ).selectExpr(
-        "vid",
-        f"CAST(gd / {sub_d} AS INT) AS subspace",
-        f"gd % {sub_d} AS d",
-        f"CAST(floor(CAST(xr AS DOUBLE) * {scale}) AS BIGINT) AS x",
+    ve = _quantized(
+        df.select(F.col(id_col).alias("vid"), vec_col), ["vid"], vec_col,
+        dim, m, scale, "pq_fit input",
     )
     seed_key = "md5(CAST(vid AS STRING))"
     seeds = (
@@ -1155,24 +1107,10 @@ def pq_knn(
             f"sub_d={geom['sub_d_fit']} (dim={int(geom['m_fit']) * int(geom['sub_d_fit'])}) "
             f"but search was called with m={m}, sub_d={sub_d} (dim={dim})"
         )
-    # probe components, quantized like the codebook, keyed by
-    # (subspace, local 0-based component); length-guarded — a short
-    # probe would build distance tables missing subspaces and rank
-    # every candidate by a partial sum (r9 review)
-    pe = probes.select(
-        F.col(probe_id_col),
-        F.posexplode(_checked_vec(probe_vec_col, dim, "pq_knn probe")).alias("gd", "xr"),
-    ).select(
-        probe_id_col,
-        (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-        (F.col("gd") % F.lit(sub_d)).alias("d"),
-        F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("qx"),
-    )
-    dtab = (
-        pe.join(F.broadcast(codebook), ["subspace", "d"])
-        .groupBy(probe_id_col, "subspace", "cluster")
-        .agg(F.sum((F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c"))).alias("dist"))
-    )
+    # probe components, quantized like the codebook; length-guarded —
+    # a short probe would build distance tables missing subspaces and
+    # rank every candidate by a partial sum (r9 review)
+    pq = _quantized(probes, [probe_id_col], probe_vec_col, dim, m, scale, "pq_knn probe")
     codes_checked = F.when(F.size("codes") == F.lit(m), F.col("codes")).otherwise(
         F.raise_error(
             F.concat(
@@ -1182,22 +1120,116 @@ def pq_knn(
             )
         )
     )
-    ce = codes.select(
-        F.col(id_col), F.posexplode(codes_checked).alias("subspace", "cluster")
+    # every code row scores against every probe's tables
+    cand = codes.select(F.col(id_col), codes_checked.alias("codes"))
+    return _adc_topk(pq, codebook, cand, [probe_id_col], k_neighbors, probe_id_col, id_col)
+
+
+def _dist_table(q: DataFrame, book: DataFrame, keys: list[str]) -> DataFrame:
+    """``(*keys, subspace, cluster, dist)``: the exact integer squared
+    distance of each quantized sub-vector of ``q`` (``_quantized``
+    rows) to every codeword of its subspace — a probe's ADC table, or
+    the argmin input of an encoding."""
+    return (
+        q.join(F.broadcast(book), ["subspace", "d"])
+        .groupBy(*keys, "subspace", "cluster")
+        .agg(F.expr("sum((x - c) * (x - c)) AS dist"))
+    )
+
+
+def _adc_topk(
+    pq: DataFrame,
+    book: DataFrame,
+    cand: DataFrame,
+    keys: list[str],
+    k: int,
+    probe_id_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The one asymmetric-distance scorer: the probes' distance tables
+    keyed by ``keys`` (the probe, plus the cell under residual
+    encoding), joined to the exploded codes of the candidate rows
+    ``cand`` on the subspace, the codeword and whichever table keys
+    ``cand`` carries (none: every code scores against every probe),
+    summed per (probe, vector), then the per-probe top-k by
+    ``(adc_dist, id)``. The tables are |probes|·m·k rows (times the
+    probed cells) — broadcast; no vector is shuffled.
+    Output: probe_id, vec_id, adc_dist (long), rank."""
+    on = [c for c in keys if c in cand.columns]
+    ce = cand.selectExpr(
+        *[f"`{c}`" for c in on + [id_col]], "posexplode(codes) AS (subspace, cluster)"
     )
     scores = (
-        ce.join(F.broadcast(dtab), ["subspace", "cluster"])
+        ce.join(F.broadcast(_dist_table(pq, book, keys)), on + ["subspace", "cluster"])
         .groupBy(probe_id_col, id_col)
-        .agg(F.sum("dist").alias("adc_dist"))
+        .agg(F.expr("sum(dist) AS adc_dist"))
     )
     return per_group_topk(
         scores,
         probe_id_col,
         [F.col("adc_dist").asc(), F.col(id_col).asc()],
-        k_neighbors,
+        k,
         rank_col="rank",
         keep_rank=True,
     )
+
+
+def _ivfadc_probes_quantized(
+    probes: DataFrame,
+    probe_cells: DataFrame,
+    centroids: DataFrame,
+    residual: bool,
+    dim: int,
+    m: int,
+    scale: int,
+    probe_id_col: str,
+    probe_vec_col: str,
+) -> tuple[DataFrame, list[str]]:
+    """The quantized probes an IVFADC search scores with, and their
+    table keys: the raw probe keyed by the probe, or under residual
+    encoding the probe's residual against each probed cell's
+    centroid, keyed by (probe, cell)."""
+    if not residual:
+        keys = [probe_id_col]
+    else:
+        keys = [probe_id_col, "cell"]
+        probes = _residuals(
+            probes, probe_cells, centroids, probe_id_col, probe_vec_col, dim, "ivfadc probe"
+        )
+    return _quantized(probes, keys, probe_vec_col, dim, m, scale, "ivfadc probe"), keys
+
+
+def _ivfadc_model(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    dim: int,
+    m: int,
+    pq_k: int,
+    iters: int,
+    scale: int,
+    id_col: str,
+    vec_col: str,
+    encode_residuals: bool,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The IVFADC model step shared by ``ivfadc_knn`` and
+    ``build_ivfadc_index``: each vector's nearest cell, and the PQ
+    codes and codebook fit over the raw vectors or over their
+    residuals. Returns ``(assigned(id, cell), codes(id, codes),
+    codebook)``."""
+    assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
+    fit_input = corpus
+    if encode_residuals:
+        # The residual frame feeds every Lloyd round, so truncate its
+        # (crossJoin+window) lineage once instead of re-deriving it
+        # per round.
+        fit_input = _residuals(
+            corpus, assigned, centroids, id_col, vec_col, dim, "ivfadc input"
+        ).localCheckpoint(eager=False)
+    codes, book = pq_fit(
+        fit_input, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
+        iters=iters, scale=scale,
+    )
+    return assigned, codes, book
 
 
 def ivfadc_knn(
@@ -1248,109 +1280,20 @@ def ivfadc_knn(
     Output: probe_id, vec_id, adc_dist (long), rank.
     """
     centroids = _hash_seeded_centroids(corpus, n_cells, id_col, vec_col)
-    assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
+    assigned, codes, book = _ivfadc_model(
+        corpus, centroids, dim, m, pq_k, iters, scale, id_col, vec_col, encode_residuals
+    )
     probe_cells = _nearest_cells(
         probes, centroids, probe_id_col, probe_vec_col, n_probe_cells
     )
-    cand = probe_cells.join(assigned, "cell").select(probe_id_col, id_col, "cell")
+    cand = probe_cells.join(assigned, "cell").join(codes, id_col)
     if exclude_id_eq_probe:
         cand = cand.filter(F.col(probe_id_col) != F.col(id_col))
-
-    sub_d = dim // m
-    if encode_residuals:
-        # Quantize x − centroid(cell(x)): exact double subtraction on
-        # both engines, then the SAME floor(x·scale) integers. The
-        # residual frame feeds every Lloyd round, so truncate its
-        # (crossJoin+window) lineage once instead of re-deriving it
-        # per round.
-        resid = (
-            corpus.select(id_col, vec_col)
-            .join(assigned, id_col)
-            .join(F.broadcast(centroids), "cell")
-            .select(
-                id_col,
-                F.zip_with(vec_col, "_cv", lambda a, b: a - b).alias(vec_col),
-            )
-            .localCheckpoint(eager=False)
-        )
-        codes, book = pq_fit(
-            resid, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
-            iters=iters, scale=scale,
-        )
-        # per-(probe, probed-cell) residual distance tables
-        pr = (
-            probes.select(probe_id_col, probe_vec_col)
-            .join(probe_cells, probe_id_col)
-            .join(F.broadcast(centroids), "cell")
-            .select(
-                probe_id_col,
-                "cell",
-                F.zip_with(
-                    _checked_vec(probe_vec_col, dim, "ivfadc probe"),
-                    "_cv",
-                    lambda a, b: a - b,
-                ).alias("_pr"),
-            )
-        )
-        pe = pr.select(
-            probe_id_col, "cell", F.posexplode("_pr").alias("gd", "xr")
-        ).select(
-            probe_id_col,
-            "cell",
-            (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-            (F.col("gd") % F.lit(sub_d)).alias("d"),
-            F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("qx"),
-        )
-        dtab = (
-            pe.join(F.broadcast(book), ["subspace", "d"])
-            .groupBy(probe_id_col, "cell", "subspace", "cluster")
-            .agg(
-                F.sum((F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c"))).alias("dist")
-            )
-        )
-        ce = codes.select(F.col(id_col), F.posexplode("codes").alias("subspace", "cluster"))
-        scores = (
-            cand.join(ce, id_col)
-            .join(F.broadcast(dtab), [probe_id_col, "cell", "subspace", "cluster"])
-            .groupBy(probe_id_col, id_col)
-            .agg(F.sum("dist").alias("adc_dist"))
-        )
-    else:
-        codes, book = pq_fit(
-            corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
-            iters=iters, scale=scale,
-        )
-        pe = probes.select(
-            F.col(probe_id_col),
-            F.posexplode(_checked_vec(probe_vec_col, dim, "ivfadc probe")).alias("gd", "xr"),
-        ).select(
-            probe_id_col,
-            (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-            (F.col("gd") % F.lit(sub_d)).alias("d"),
-            F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("qx"),
-        )
-        dtab = (
-            pe.join(F.broadcast(book), ["subspace", "d"])
-            .groupBy(probe_id_col, "subspace", "cluster")
-            .agg(
-                F.sum((F.col("qx") - F.col("c")) * (F.col("qx") - F.col("c"))).alias("dist")
-            )
-        )
-        ce = codes.select(F.col(id_col), F.posexplode("codes").alias("subspace", "cluster"))
-        scores = (
-            cand.join(ce, id_col)
-            .join(F.broadcast(dtab), [probe_id_col, "subspace", "cluster"])
-            .groupBy(probe_id_col, id_col)
-            .agg(F.sum("dist").alias("adc_dist"))
-        )
-    return per_group_topk(
-        scores,
-        probe_id_col,
-        [F.col("adc_dist").asc(), F.col(id_col).asc()],
-        k_neighbors,
-        rank_col="rank",
-        keep_rank=True,
+    pq, keys = _ivfadc_probes_quantized(
+        probes, probe_cells, centroids, encode_residuals, dim, m, scale,
+        probe_id_col, probe_vec_col,
     )
+    return _adc_topk(pq, book, cand, keys, k_neighbors, probe_id_col, id_col)
 
 
 # the fixed schemas of a stored IVFADC index's model tables: reading
@@ -1388,10 +1331,10 @@ def build_ivfadc_index(
     caller to repeat them (the mismatch class ADVICE r4 flagged on
     ``pq_knn``, solved structurally here).
 
-    Same deterministic construction as ``ivfadc_knn`` (hash-seeded
-    cells, joint quantized Lloyd, optional residual encoding), so a
-    stored index searched with the same knobs reproduces the
-    in-memory operator bit for bit (equivalence-tested).
+    Same model step as ``ivfadc_knn`` (``_ivfadc_model``: hash-seeded
+    cells, joint quantized Lloyd, optional residual encoding) and the
+    same ADC scorer, so a stored index searched with the same knobs
+    reproduces the in-memory operator bit for bit (equivalence-tested).
 
     A build or rebuild is a new index generation, staged and swapped
     in as a unit (``index_store.generation``): a crash mid-rebuild
@@ -1415,26 +1358,9 @@ def build_ivfadc_index(
             .parquet(f"{tmp}/centroids")
             .withColumnRenamed("center", "_cv")
         )
-        assigned = _nearest_cells(corpus, centroids, id_col, vec_col, 1)
-
-        if encode_residuals:
-            fit_input = (
-                corpus.select(id_col, vec_col)
-                .join(assigned, id_col)
-                .join(F.broadcast(centroids), "cell")
-                .select(
-                    id_col,
-                    F.zip_with(vec_col, "_cv", lambda a, b: a - b).alias(vec_col),
-                )
-                .localCheckpoint(eager=False)
-            )
-        else:
-            fit_input = corpus.select(id_col, vec_col)
-        codes, book = pq_fit(
-            fit_input, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=pq_k,
-            iters=iters, scale=scale,
+        assigned, codes, book = _ivfadc_model(
+            corpus, centroids, dim, m, pq_k, iters, scale, id_col, vec_col, encode_residuals
         )
-
         (
             codes.join(assigned, id_col)
             .select(id_col, F.col("codes").cast("array<int>").alias("codes"), "cell")
@@ -1473,8 +1399,6 @@ def ivfadc_index_search(
     """
     IS.heal(spark, path, _IVFADC_TABLES)
     meta = IS.read_meta(spark, path, _IVFADC_META_SCHEMA)
-    dim, m, scale = meta.dim, meta.m, meta.scale
-    sub_d = dim // m
     centroids = spark.read.parquet(f"{path}/centroids").withColumnRenamed("center", "_cv")
     book = spark.read.schema(_CODEBOOK_SCHEMA).parquet(f"{path}/codebook")
 
@@ -1500,63 +1424,16 @@ def ivfadc_index_search(
             F.broadcast(tomb.withColumnRenamed("tomb_id", id_col)), id_col, "left_anti"
         )
 
-    if meta.encode_residuals:
-        pr = (
-            probes.select(probe_id_col, probe_vec_col)
-            .join(probe_cells, probe_id_col)
-            .join(F.broadcast(centroids), "cell")
-            .select(
-                probe_id_col,
-                "cell",
-                F.zip_with(
-                    _checked_vec(probe_vec_col, dim, "ivfadc probe"),
-                    "_cv",
-                    lambda a, b: a - b,
-                ).alias("_pr"),
-            )
-        )
-        exploded = pr.select(probe_id_col, "cell", F.posexplode("_pr").alias("gd", "xr"))
-        keys = [probe_id_col, "cell"]
-    else:
-        exploded = probes.select(
-            F.col(probe_id_col),
-            F.posexplode(_checked_vec(probe_vec_col, dim, "ivfadc probe")).alias("gd", "xr"),
-        )
-        keys = [probe_id_col]
-    # the quantization and the distance table in SQL text, spelled as in
-    # pq_fit: a handful of Py4J calls instead of one per Column node
-    pid, vid = f"`{probe_id_col}`", f"`{id_col}`"
-    pe = exploded.selectExpr(
-        *[f"`{c}`" for c in keys],
-        f"CAST(gd / {sub_d} AS INT) AS subspace",
-        f"gd % {sub_d} AS d",
-        f"CAST(floor(CAST(xr AS DOUBLE) * {scale}) AS BIGINT) AS qx",
-    )
-    dtab = (
-        pe.join(F.broadcast(book), ["subspace", "d"])
-        .groupBy(*keys, "subspace", "cluster")
-        .agg(F.expr("sum((qx - c) * (qx - c)) AS dist"))
-    )
-
     # batch-sized build side; the broadcast is what dynamic partition
     # pruning reuses to prune the codes scan to the probed cells
     cand = codes.join(F.broadcast(probe_cells), "cell")
     if exclude_id_eq_probe:
-        cand = cand.where(f"{pid} != {vid}")
-    ce = cand.selectExpr(pid, vid, "cell", "posexplode(codes) AS (subspace, cluster)")
-    scores = (
-        ce.join(F.broadcast(dtab), keys + ["subspace", "cluster"])
-        .groupBy(probe_id_col, id_col)
-        .agg(F.expr("sum(dist) AS adc_dist"))
+        cand = cand.where(f"`{probe_id_col}` != `{id_col}`")
+    pq, keys = _ivfadc_probes_quantized(
+        probes, probe_cells, centroids, meta.encode_residuals, meta.dim, meta.m,
+        meta.scale, probe_id_col, probe_vec_col,
     )
-    return per_group_topk(
-        scores,
-        probe_id_col,
-        [F.col("adc_dist").asc(), F.col(id_col).asc()],
-        k_neighbors,
-        rank_col="rank",
-        keep_rank=True,
-    )
+    return _adc_topk(pq, book, cand, keys, k_neighbors, probe_id_col, id_col)
 
 
 def ivfadc_rerank_knn(
@@ -1770,21 +1647,11 @@ def pq_encode_with_book(
     (tested). One explode + broadcast-codebook join + two keyed
     aggregates; nothing quadratic.
     """
-    sub_d = dim // m
-    ve = df.select(
-        F.col(id_col).alias("vid"),
-        F.posexplode(_checked_vec(vec_col, dim, "pq_encode_with_book input")).alias("gd", "xr"),
-    ).select(
-        "vid",
-        (F.col("gd") / F.lit(sub_d)).cast("int").alias("subspace"),
-        (F.col("gd") % F.lit(sub_d)).alias("d"),
-        F.floor(F.col("xr").cast("double") * F.lit(scale)).cast("long").alias("x"),
+    ve = _quantized(
+        df.select(F.col(id_col).alias("vid"), vec_col), ["vid"], vec_col,
+        dim, m, scale, "pq_encode_with_book input",
     )
-    dist = (
-        ve.join(F.broadcast(codebook), ["subspace", "d"])
-        .groupBy("vid", "subspace", "cluster")
-        .agg(F.sum((F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))).alias("dist"))
-    )
+    dist = _dist_table(ve, codebook, ["vid"])
     return (
         dist.groupBy("vid", "subspace")
         .agg(F.min(F.struct("dist", "cluster")).alias("m"))
@@ -1835,22 +1702,14 @@ def upsert_ivfadc_index(
     centroids = spark.read.parquet(f"{path}/centroids").select(
         "cell", F.col("center").alias("_cv")
     )
-    book = spark.read.parquet(f"{path}/codebook")
+    book = spark.read.schema(_CODEBOOK_SCHEMA).parquet(f"{path}/codebook")
 
     assigned = _nearest_cells(new_vectors, centroids, id_col, vec_col, 1)
-
+    fit_input = new_vectors
     if meta.encode_residuals:
-        fit_input = (
-            new_vectors.select(id_col, vec_col)
-            .join(assigned, id_col)
-            .join(F.broadcast(centroids), "cell")
-            .select(
-                id_col,
-                F.zip_with(vec_col, "_cv", lambda a, b: a - b).alias(vec_col),
-            )
+        fit_input = _residuals(
+            new_vectors, assigned, centroids, id_col, vec_col, meta.dim, "ivfadc upsert"
         )
-    else:
-        fit_input = new_vectors.select(id_col, vec_col)
     codes = pq_encode_with_book(
         fit_input, book, id_col=id_col, vec_col=vec_col,
         dim=meta.dim, m=meta.m, scale=meta.scale,

@@ -1086,7 +1086,9 @@ def als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratings = _ratings_shaped(spark, sf_dir).cache()
     cfg = ALSConfig(rank=8, reg_param=0.1, max_iter=5, seed=42)
     model = fit_als(ratings, "userId", "movieId", "rating", cfg)
-    users = ratings.select("userId").distinct().limit(100)
+    # ordered before the limit: an unordered limit takes whichever 100
+    # users the partitions deliver first, which moves with their count
+    users = ratings.select("userId").distinct().orderBy("userId").limit(100)
     recs = recommend_for_users(model, users, k=5)
     return recs.select("user", "rank", "item", F.round("score", 4).alias("score"))
 

@@ -414,3 +414,22 @@ def test_filesystem_calls_only_in_index_store():
         if fs_call.search(p.read_text(encoding="utf-8"))
     )
     assert callers == ["operators/index_store.py"], callers
+
+
+def test_ivf_pq_core_written_once():
+    """The IVF/PQ operators share one ADC scorer and one residual
+    projection: the per-(probe, vector) sum of table distances and the
+    ``vec − centroid`` subtraction each appear once in
+    ``operators/vectorops.py``. A second copy lets the in-memory
+    operator and the stored index drift apart."""
+    import pathlib
+    import re
+
+    import big_data_movie_recommendation_and_customer_segmentation_spark as package
+
+    src = (pathlib.Path(package.__file__).parent / "operators" / "vectorops.py").read_text(
+        encoding="utf-8"
+    )
+    adc_sums = re.findall(r'\bsum\(\s*"?dist"?\s*\)', src)
+    residuals = re.findall(r"\ba,\s*b\)?\s*(?::|->)\s*a\s*-\s*b\b", src)
+    assert (len(adc_sums), len(residuals)) == (1, 1), (adc_sums, residuals)

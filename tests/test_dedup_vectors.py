@@ -11,14 +11,21 @@ from big_data_movie_recommendation_and_customer_segmentation_spark.operators imp
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
 
+# module-scoped caches are dropped at teardown: a cached table left in
+# the session swaps its scan into later modules' plans, which then run
+# extra cache-materializing jobs and break their job budgets
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
-    return load_table(spark, sf_dir, "documents").cache()
+    df = load_table(spark, sf_dir, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
-    return load_table(spark, sf_dir, "embeddings").cache()
+    df = load_table(spark, sf_dir, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def test_minhash_dedup_subset_and_recall(spark, docs):

@@ -13,6 +13,7 @@ from big_data_movie_recommendation_and_customer_segmentation_spark.operators imp
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
 SEARCH_JOBS = 12
+BUILD_JOBS = 19
 
 
 def _executed_scans(df, table_dir: str) -> list[dict]:
@@ -102,6 +103,44 @@ def test_ivfadc_index_search_job_budget(spark, sf_dir, tmp_path, count_jobs):
     )
     # the budget is the count measured on this fixture
     assert jobs <= SEARCH_JOBS, jobs
+
+
+def test_build_job_budget(spark, sf_dir, tmp_path, count_jobs):
+    """An index build runs a fixed number of Spark jobs: the seed pick,
+    the PQ fit and the codes write, with the model step shared by the
+    in-memory operator adding none."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    jobs = count_jobs(
+        lambda: VO.build_ivfadc_index(e, str(tmp_path / "ivfadc_build"), n_cells=8, iters=1)
+    )
+    # the budget is the count measured on this fixture
+    assert jobs <= BUILD_JOBS, jobs
+
+
+def test_pq_knn_over_stored_index_matches_full_probe_search(spark, sf_dir, tmp_path):
+    """``pq_knn`` over a stored index's codes and codebook ranks every
+    vector; ``ivfadc_index_search`` probing every cell of a raw-encoded
+    index does too. The two callers of the one ADC scorer must agree
+    on every row, distances included."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    path = str(tmp_path / "ivfadc_full")
+    VO.build_ivfadc_index(e, path, n_cells=8, dim=64, m=8, pq_k=16, iters=2)
+    probes = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    searched = VO.ivfadc_index_search(spark, path, probes, k_neighbors=10, n_probe_cells=8)
+    direct = VO.pq_knn(
+        spark.read.parquet(f"{path}/codes"), spark.read.parquet(f"{path}/codebook"),
+        probes, k_neighbors=10, dim=64, m=8,
+    )
+
+    def rows(df):
+        return sorted((r.probe_id, r.vec_id, r.adc_dist, r.rank) for r in df.collect())
+
+    got = rows(searched)
+    assert len(got) == 50 and got == rows(direct)
 
 
 def test_ivfadc_index_meta_drives_geometry(spark, sf_dir, tmp_path):

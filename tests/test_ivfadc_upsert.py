@@ -14,6 +14,8 @@ from big_data_movie_recommendation_and_customer_segmentation_spark.operators imp
 from big_data_movie_recommendation_and_customer_segmentation_spark.operators import vectorops as VO
 from big_data_movie_recommendation_and_customer_segmentation_spark.sources import load_table
 
+UPSERT_JOBS = 24
+
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
@@ -28,6 +30,18 @@ def test_encode_with_book_reproduces_fit_codes(spark, emb):
     a = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
     b = {r["vec_id"]: list(r["codes"]) for r in re_encoded.collect()}
     assert a == b
+
+
+def test_upsert_job_budget(spark, emb, tmp_path, count_jobs):
+    """An upsert runs a fixed number of Spark jobs: the model tables
+    are read with their written schemas, so no read infers one."""
+    path = str(tmp_path / "idx_budget")
+    VO.build_ivfadc_index(emb.filter(F.col("vec_id") % 2 == 0), path, n_cells=8, iters=1)
+    jobs = count_jobs(
+        lambda: VO.upsert_ivfadc_index(emb.filter(F.col("vec_id") % 2 == 1), path)
+    )
+    # the budget is the count measured on this fixture
+    assert jobs <= UPSERT_JOBS, jobs
 
 
 @pytest.mark.parametrize("residual", [False, True])
@@ -536,3 +550,21 @@ def test_wrong_dim_vectors_raise_instead_of_silently_ranking(
     codes, book = VO.pq_fit(emb.filter(F.col("vec_id") < 50), dim=64, m=8, k=16, iters=1)
     with pytest.raises(Exception, match="vector length|Py4JJavaError"):
         VO.pq_knn(codes, book, short_probe, dim=64, m=8).collect()
+
+
+def test_residual_upsert_rejects_wrong_dim_vectors(spark, emb, tmp_path):
+    """Under residual encoding the vector is checked before the
+    centroid subtraction: ``zip_with`` pads a short vector with NULLs
+    to the centroid's length, so a check after it passed a 48-d vector
+    and stored codes for its missing subspaces."""
+    path = str(tmp_path / "idx_dim_resid")
+    VO.build_ivfadc_index(
+        emb.filter(F.col("vec_id") < 100), path, n_cells=4, iters=1,
+        encode_residuals=True,
+    )
+    short = spark.createDataFrame(
+        [(999, [0.5] * 48)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="vector length 48 != expected dim 64"):
+        VO.upsert_ivfadc_index(short, path)
+    assert not spark.read.parquet(f"{path}/codes").filter("vec_id = 999").collect()
